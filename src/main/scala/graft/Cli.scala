@@ -116,12 +116,11 @@ object Cli {
             throw new IllegalArgumentException(
               s"${many.map("--" + _._1).mkString(" and ")} are mutually exclusive\n$usage")
         }
-        val v = out.validity.head()
-        println(s"[graft] nr_psms=${v.getAs[Long]("nr_psms")} nr_decoys=${v.getAs[Long]("nr_decoys")}")
+        println(s"[graft] nr_psms=${out.nrPsms} nr_decoys=${out.nrDecoys}")
         // F9 assay gate (PrideAnalysisAssayService.java:477-480)
-        if (v.getAs[Long]("nr_decoys") == 0)
+        if (out.nrDecoys == 0)
           System.err.println("[graft] WARNING: no decoys found — assay invalid under F9")
-        if (v.getAs[Long]("nr_psms") <= cfg.minPsms)
+        if (out.nrPsms <= cfg.minPsms)
           System.err.println(s"[graft] WARNING: psms <= ${cfg.minPsms} — assay below minPSMs gate")
 
       case "perform-inference" =>

@@ -194,6 +194,121 @@ object TargetDecoy {
     result
   }
 
+  /** The PSM FDR of the index pipeline in ONE sorted sweep: adds `q` and
+    * `fdrScore` to `df`, value-identical (bit for bit) to the composition
+    * [[withQValues]] (no partitioning) -> `CombinedFdr.withFdrScoreFromCounts`
+    * -> [[repairZeroQValuesAll]] over (`q_value` -> `q`, `fdr_score` ->
+    * `fdrScore`), which stays the parity oracle and the distributed form.
+    *
+    * The narrow (key, score, isDecoy) projection is sorted once, best
+    * first, into one partition — the same sort orders as the window form,
+    * so null and NaN scores rank identically. One task then holds only the
+    * keys and primitive arrays and computes, in that order: the running
+    * decoy/target FDR, the q-value as a suffix minimum, the
+    * rank-interpolated FDR score between decoy steps, and the minimum
+    * positive value of each for the P9 zero repair. The repair itself is
+    * the same Column expression as [[repairZeroQValuesAll]] (Spark's
+    * HALF_UP `round`), and (key, q, fdrScore) joins back to `df`.
+    *
+    * For one assay of up to a few million PSMs (the pipeline's window
+    * path); larger assays take [[withQValuesGlobal]].
+    *
+    * @param key unique, non-repeating row key — the tie-break of the sort
+    *            and the join key back (null-safe, so one NULL key is kept)
+    * @param isDecoy decoy flag; NULL counts as a target
+    */
+  def withSweptQAndFdrScore(
+      df: DataFrame,
+      key: String,
+      score: Column,
+      isDecoy: Column,
+      lowerIsBetter: Boolean = false,
+  ): DataFrame = {
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types._
+
+    val narrow = df.select(col(key).as("_k"), score.as("_s"),
+      coalesce(isDecoy, lit(false)).as("_d"))
+    // withQValues' bestFirst, on the projected columns
+    val bestFirst =
+      if (lowerIsBetter) Seq(col("_s").asc_nulls_last, col("_k").asc)
+      else Seq(col("_s").desc, col("_k").asc)
+    val outSchema = StructType(Seq(
+      StructField("_k", narrow.schema("_k").dataType),
+      StructField("_q", DoubleType, nullable = false),
+      StructField("_fs", DoubleType, nullable = false),
+      StructField("_minPosQ", DoubleType),
+      StructField("_minPosFs", DoubleType)))
+    val swept = narrow.repartition(1).sortWithinPartitions(bestFirst: _*)
+      .mapPartitions { rows =>
+        val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
+        val decoys = scala.collection.mutable.ArrayBuilder.make[Boolean]
+        rows.foreach { r => keys += r.get(0); decoys += r.getBoolean(2) }
+        val (q, fs) = sweep(decoys.result())
+        val minPosQ = minPositive(q)
+        val minPosFs = minPositive(fs)
+        keys.iterator.zipWithIndex.map { case (k, i) => Row(k, q(i), fs(i), minPosQ, minPosFs) }
+      }(Encoders.row(outSchema))
+      .select(col("_k"),
+        zeroRepaired(col("_q"), col("_minPosQ")).as("q"),
+        zeroRepaired(col("_fs"), col("_minPosFs")).as("fdrScore"))
+    df.join(swept, col(key) <=> col("_k")).drop("_k")
+  }
+
+  /** The raw (pre-repair) q-values and FDR scores of a best-first decoy
+    * sequence: the arithmetic of [[withQValues]] and
+    * `CombinedFdr.withFdrScoreFromCounts`, in the same operation order. */
+  private[fdr] def sweep(decoy: Array[Boolean]): (Array[Double], Array[Double]) = {
+    val n = decoy.length
+    val q = new Array[Double](n)
+    var d = 0L
+    var t = 0L
+    var i = 0
+    while (i < n) { // running FDR
+      if (decoy(i)) d += 1 else t += 1
+      q(i) = d.toDouble / math.max(t, 1L)
+      i += 1
+    }
+    i = n - 2
+    while (i >= 0) { // q = min(FDR_j : j >= i)
+      if (q(i + 1) < q(i)) q(i) = q(i + 1)
+      i -= 1
+    }
+    // FDR score: rank r between the decoy steps (r0, q0) at or before it
+    // — (0, 0) ahead of the first decoy — and (r1, q1) strictly after it;
+    // past the last decoy the row keeps its q-value
+    val fs = new Array[Double](n)
+    var r0 = 0.0
+    var q0 = 0.0
+    var next = 0 // the first decoy index after i, n when there is none
+    i = 0
+    while (i < n) {
+      if (decoy(i)) { r0 = (i + 1).toDouble; q0 = q(i) }
+      if (next <= i) { next = i + 1; while (next < n && !decoy(next)) next += 1 }
+      fs(i) =
+        if (next == n) q(i)
+        else q0 + ((i + 1).toDouble - r0) * (q(next) - q0) / ((next + 1).toDouble - r0)
+      i += 1
+    }
+    (q, fs)
+  }
+
+  /** min(v > 0) boxed, null when no value is positive (`min(when(v > 0, v))`). */
+  private def minPositive(v: Array[Double]): java.lang.Double = {
+    var m = Double.PositiveInfinity
+    v.foreach(x => if (x > 0.0 && x < m) m = x)
+    if (m == Double.PositiveInfinity) null else m
+  }
+
+  /** P9 repair of `q` given the group's minimum positive value `minPos`:
+    * q > 0 is kept, q == 0 becomes round(minPos / 10, 6), or NaN when no
+    * positive value exists. NULL q stays NULL — fabricating min/10 for a
+    * row whose q was never computed would invent confidence. */
+  private def zeroRepaired(q: Column, minPos: Column): Column =
+    when(q.isNull, lit(null).cast("double"))
+      .when(q > 0.0, q)
+      .otherwise(when(minPos.isNull, lit(Double.NaN)).otherwise(round(minPos / 10.0, 6)))
+
   /** P9 — q-value repair: q == 0 is replaced by `min(positive q) / 10`
     * rounded HALF_UP to 6 dp (NaN when no positive q exists in the group).
     * Reference: SubmissionPipelineUtils.getQValueLower:368-377 (BigDecimal
@@ -202,22 +317,15 @@ object TargetDecoy {
     * The group-global minimum is a windowed aggregate over the assay
     * partition — no driver round-trip, no cross join. */
   def repairZeroQValues(df: DataFrame, q: Column, partitionBy: Seq[Column], outCol: String): DataFrame = {
-    def repaired(minPos: Column) =
-      // NULL q stays NULL — only a literal zero is "repaired"; fabricating
-      // min/10 for a row whose q was never computed would invent confidence
-      when(q.isNull, lit(null).cast("double"))
-        .when(q > 0.0, q)
-        .otherwise(
-          when(minPos.isNull, lit(Double.NaN)).otherwise(round(minPos / 10.0, 6)))
     if (partitionBy.isEmpty) {
       // Global form: an empty-partition window would funnel the whole
       // frame through one task — a broadcast of the one-row aggregate
       // keeps the plan fully parallel.
       val minRow = broadcast(df.agg(min(when(q > 0.0, q)).as("_minPosQ")))
-      df.crossJoin(minRow).withColumn(outCol, repaired(col("_minPosQ"))).drop("_minPosQ")
+      df.crossJoin(minRow).withColumn(outCol, zeroRepaired(q, col("_minPosQ"))).drop("_minPosQ")
     } else {
       val minPos = min(when(q > 0.0, q)).over(Window.partitionBy(partitionBy: _*))
-      df.withColumn(outCol, repaired(minPos))
+      df.withColumn(outCol, zeroRepaired(q, minPos))
     }
   }
 
@@ -234,13 +342,7 @@ object TargetDecoy {
     }
     val minRow = broadcast(df.agg(aggs.head, aggs.tail: _*))
     val out = repairs.zipWithIndex.foldLeft(df.crossJoin(minRow)) {
-      case (acc, ((q, outCol), i)) =>
-        val minPos = col(s"_minPosQ$i")
-        acc.withColumn(outCol,
-          when(q.isNull, lit(null).cast("double"))
-            .when(q > 0.0, q)
-            .otherwise(when(minPos.isNull, lit(Double.NaN))
-              .otherwise(round(minPos / 10.0, 6))))
+      case (acc, ((q, outCol), i)) => acc.withColumn(outCol, zeroRepaired(q, col(s"_minPosQ$i")))
     }
     out.drop(repairs.indices.map(i => s"_minPosQ$i"): _*)
   }

@@ -35,15 +35,16 @@ object IndexPipeline {
       /** true when smaller PSM scores are better (e-values / PEP). */
       scoreLowerIsBetter: Boolean = false,
       /** Force the range-partitioned distributed FDR
-        * (TargetDecoy.withQValuesGlobal) instead of the single-partition
-        * window. The window is faster up to several million PSMs (the FDR
-        * runs pre-join on narrow rows and the rest of the DAG dominates);
-        * normally leave this false — the pipeline auto-switches to the
-        * distributed path when the deduped PSM count exceeds
-        * [[fdrWindowMaxRows]]. */
+        * (TargetDecoy.withQValuesGlobal) instead of the single-task sorted
+        * sweep (TargetDecoy.withSweptQAndFdrScore). The sweep is faster up
+        * to several million PSMs: it sorts only the narrow (psmId, score,
+        * isDecoy) rows and joins two values back, while the distributed
+        * path range-sorts and re-materializes the full PSM rows. Normally
+        * leave this false — the pipeline auto-switches to the distributed
+        * path when the deduped PSM count exceeds [[fdrWindowMaxRows]]. */
       distributedFdr: Boolean = false,
       /** Auto-switch threshold: above this many deduped PSMs the FDR takes
-        * the distributed range-sort path rather than one window task.
+        * the distributed range-sort path rather than one sweep task.
         * 4M narrow rows sort comfortably in one task (reference assays cap
         * at ~800k, conf/base.config:53-57); beyond that the single sorted
         * partition becomes the straggler. */
@@ -90,8 +91,12 @@ object IndexPipeline {
       archiveSpectra: DataFrame,
       psmSummaries: DataFrame,
       proteinEvidence: DataFrame,
-      /** F9 counters: (nr_psms, nr_decoys, nr_error_delta). */
+      /** F9 counters: (nr_psms, nr_decoys, nr_error_delta, hard_delta_fail). */
       validity: DataFrame,
+      /** F9 `nr_psms` and `nr_decoys`, already counted by `run` — read them
+        * here rather than by running `validity`. */
+      nrPsms: Long,
+      nrDecoys: Long,
       /** The shared cached intermediates behind all four frames. */
       private val cached: Seq[DataFrame] = Seq.empty,
   ) {
@@ -125,6 +130,18 @@ object IndexPipeline {
           modification = CvParam("UNIMOD", acc, acc, null),
           properties = Seq.empty)
       })
+
+  /** Spectrum file types addressed by index, not by id (the MGF family). */
+  private val IndexAddressedTypes = Seq("MGF", "PKL", "APL", "DTA", "MS2")
+
+  /** True when the optimizer folds `df` to an empty relation. The ANALYZED
+    * plan is optimized, before cache substitution: a persisted input would
+    * otherwise be an opaque in-memory leaf, whatever filter sits on it. */
+  private def provablyEmpty(df: DataFrame): Boolean =
+    df.sparkSession.sessionState.optimizer.execute(df.queryExecution.analyzed) match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.isEmpty
+      case _ => false
+    }
 
   /** J1 — PSM⋈spectrum resolution: the reference's staged id lookup
     * (JmzReaderSpectrumService.getSpectrumById:70-106) as joins.
@@ -188,15 +205,19 @@ object IndexPipeline {
           regexp_replace(col("sourceId"), "scan=", ""))
           .otherwise(col("sourceId")))
 
-    // Index-addressed assays (the MGF family, a plan-time-literal
-    // idFormat) fold `unmatched` to an empty relation in the optimizer —
-    // for them the rescue is proven dead WITHOUT running a job, and the
-    // join stays a single lazy equi-join with zero added cost.
-    val rescueDead = unmatched.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.isEmpty
-      case _ => false
-    }
-    if (rescueDead) return exact
+    // The rescue's contains-join input: the id-addressed spectra.
+    val containsBase = spectraKeyed
+      .filter(!col("spectrumFileType").isin(IndexAddressedTypes: _*))
+
+    // The rescue is dead when either join input is provably empty, and the
+    // join then stays a single lazy equi-join: no probe job, no pin.
+    //  - `unmatched` folds when the optimizer can evaluate idFormat to an
+    //    index-addressed format, e.g. a plan literal. It never folds for
+    //    the mzid and mzTab commands: their idFormat arrives through a
+    //    join with the parsed input.
+    //  - `containsBase` folds when every spectra source is MGF-family:
+    //    readSpectraDir stamps each reader's `fileType` as a literal.
+    if (provablyEmpty(unmatched) || provablyEmpty(containsBase)) return exact
 
     // A live rescue subtree reads psmKeyed three times (exact side, probe
     // collect, rescued side) — pin it so the upstream DAG (in the pipeline:
@@ -230,8 +251,6 @@ object IndexPipeline {
       }
     val lookup = spark.createDataFrame(
       java.util.Arrays.asList(lookupRows: _*), lookupSet.schema)
-    val containsBase = spectraKeyed
-      .filter(!col("spectrumFileType").isin("MGF", "PKL", "APL", "DTA", "MS2"))
     val payloadCols = containsBase.columns
       .filterNot(Seq("fileName", "scanKey", "scanId", "spectrumFileType").contains).toSeq
     val hits = containsBase.join(
@@ -324,25 +343,27 @@ object IndexPipeline {
       coalesce(sum(when(col("isDecoy"), 1L).otherwise(0L)), lit(0L)).as("nr_decoys")).head()
     val psmCount = preCounts.getLong(0)
     val nrDecoys = preCounts.getLong(1)
-    val scored =
-      if (useDistributedFdr(cfg, psmCount))
-        TargetDecoy.withQValuesGlobal(
-          psmsU, col("score"), col("isDecoy"), col("psmId"),
-          lowerIsBetter = cfg.scoreLowerIsBetter)
-      else
-        TargetDecoy.withQValues(
-          psmsU, Seq.empty, col("score"), col("isDecoy"), col("psmId"),
-          lowerIsBetter = cfg.scoreLowerIsBetter)
     // Rank-interpolated FDR score (the value the reference writes under
     // MS:1002354, PrideAnalysisAssayService.java:627-628), computed from
     // the raw q-value steps; both it and the q-value then get the
-    // getQValueLower-style zero repair (P9).
-    val withFdrScore = graft.fdr.CombinedFdr.withFdrScoreFromCounts(scored, col("isDecoy"))
-    // both zero-repairs from ONE aggregation pass — the nested
-    // single-column form re-embedded the FDR subtree once per column
-    val repaired = TargetDecoy.repairZeroQValuesAll(withFdrScore,
-      Seq(col("q_value") -> "q", col("fdr_score") -> "fdrScore"))
-      .drop("cum_decoys", "cum_targets", "fdr", "q_value", "fdr_score")
+    // getQValueLower-style zero repair (P9). Up to fdrWindowMaxRows all of
+    // it is ONE sorted sweep over the narrow (psmId, score, isDecoy) rows,
+    // joined back; above it, the same values come from the range-sorted
+    // composition.
+    val repaired =
+      if (useDistributedFdr(cfg, psmCount)) {
+        val scored = TargetDecoy.withQValuesGlobal(
+          psmsU, col("score"), col("isDecoy"), col("psmId"),
+          lowerIsBetter = cfg.scoreLowerIsBetter)
+        val withFdrScore = graft.fdr.CombinedFdr.withFdrScoreFromCounts(scored, col("isDecoy"))
+        // both zero-repairs from ONE aggregation pass — the nested
+        // single-column form re-embedded the FDR subtree once per column
+        TargetDecoy.repairZeroQValuesAll(withFdrScore,
+          Seq(col("q_value") -> "q", col("fdr_score") -> "fdrScore"))
+          .drop("cum_decoys", "cum_targets", "fdr", "q_value", "fdr_score")
+      } else
+        TargetDecoy.withSweptQAndFdrScore(psmsU, "psmId", col("score"), col("isDecoy"),
+          lowerIsBetter = cfg.scoreLowerIsBetter)
 
     // ---- F3/F4/F6/F7 PSM filters ---------------------------------------
     val filtered = repaired
@@ -355,9 +376,9 @@ object IndexPipeline {
 
     // ---- J1 scan-key join ----------------------------------------------
     // scanKeyJoin persists this frame ONLY when the stage-2 rescue subtree
-    // is live (it then has three readers above the FDR sort); for
-    // index-addressed assays the optimizer proves the rescue dead and no
-    // pin happens. Unpersist below is a no-op in that case.
+    // is live (it then has three readers above the FDR); for MGF-family
+    // spectra the optimizer proves the rescue dead and no pin happens.
+    // IndexOutputs.unpersist is a no-op for it in that case.
     val psmKeyed = filtered.withColumn(
       "scanKey", UsiFunctions.normalizeScanId(col("sourceId"), col("idFormat")))
 
@@ -369,7 +390,7 @@ object IndexPipeline {
     val spectraKeyed = spectra
       .filter(col("msLevel") =!= 1) // F11 (JmzReaderSpectrumService.java:105-106)
       .withColumn("scanKey",
-        when(col("fileType").isin("MGF", "PKL", "APL", "DTA", "MS2"),
+        when(col("fileType").isin(IndexAddressedTypes: _*),
           (col("index") + 1).cast("string"))
           .otherwise(UsiFunctions.normalizeScanId(col("scanId"),
             lit(UsiFunctions.IdFormat.MzmlId))))
@@ -521,7 +542,7 @@ object IndexPipeline {
     val proteinEvidence = buildProteinEvidence(perPsm, cfg)
 
     IndexOutputs(archiveSpectra, psmSummaries, proteinEvidence, validity,
-      Seq(perPsm, psmsU, psmKeyed))
+      psmCount, nrDecoys, Seq(perPsm, psmsU, psmKeyed))
   }
 
   /** proteinIndexStep (PrideAnalysisAssayService.java:938-995) as one

@@ -1,6 +1,7 @@
 package graft
 
-import graft.fdr.{ProteinInference, TargetDecoy}
+import graft.fdr.{CombinedFdr, ProteinInference, TargetDecoy}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -205,5 +206,57 @@ class FdrSpec extends AnyFunSuite {
       .orderBy(col("id")).select(col("q_r"), col("f_r"))
       .collect().map(_.toSeq).toSeq
     assert(combined == nested)
+  }
+
+  // ---- one-sweep PSM FDR (the index pipeline's window path) ----
+
+  /** Seeded assay of `n` PSMs: scores tie (whole numbers), and are
+    * sometimes NULL or NaN; decoy flags are sometimes NULL. */
+  private def randomAssay(seed: Int, n: Int, decoyRate: Double): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val rows = (0 until n).map { i =>
+      val score = rnd.nextInt(20) match {
+        case 0 => None
+        case 1 => Some(Double.NaN)
+        case _ => Some(math.floor(rnd.nextDouble() * 25))
+      }
+      val decoy = if (rnd.nextInt(15) == 0) None else Some(rnd.nextDouble() < decoyRate)
+      (s"p$i", score, decoy)
+    }
+    rows.toDF("id", "score", "decoy").repartition(3)
+  }
+
+  /** (id, q, fdrScore) sorted by id, doubles as bits (NaN equals NaN). */
+  private def qAndFdrScoreBits(df: DataFrame): Seq[(Option[String], Long, Long)] =
+    df.select(col("id"), col("q"), col("fdrScore")).collect().toSeq
+      .map(r => (Option(r.getString(0)), java.lang.Double.doubleToLongBits(r.getDouble(1)),
+        java.lang.Double.doubleToLongBits(r.getDouble(2))))
+      .sortBy(_._1)
+
+  test("withSweptQAndFdrScore is bit-identical to withQValues -> withFdrScoreFromCounts -> repairZeroQValuesAll") {
+    val nullKey = Seq[(String, Option[Double], Option[Boolean])]((null, Some(3.0), Some(false)))
+      .toDF("id", "score", "decoy")
+    val assays = Seq(
+      "mixed" -> randomAssay(1, 300, 0.2).unionByName(nullKey),
+      "few decoys" -> randomAssay(2, 250, 0.03),
+      "no decoys" -> randomAssay(3, 120, 0.0),
+      "all decoys" -> randomAssay(4, 120, 1.0).na.fill(true, Seq("decoy")),
+      "one row" -> randomAssay(5, 1, 0.5),
+      "zero rows" -> randomAssay(6, 0, 0.5),
+    )
+    for ((name, df) <- assays; lowerIsBetter <- Seq(false, true)) {
+      val scored = TargetDecoy.withQValues(
+        df, Seq.empty, col("score"), col("decoy"), col("id"), lowerIsBetter)
+      val oracle = TargetDecoy.repairZeroQValuesAll(
+        CombinedFdr.withFdrScoreFromCounts(scored, col("decoy")),
+        Seq(col("q_value") -> "q", col("fdr_score") -> "fdrScore"))
+      val swept = TargetDecoy.withSweptQAndFdrScore(
+        df, "id", col("score"), col("decoy"), lowerIsBetter)
+      val want = qAndFdrScoreBits(oracle)
+      assert(qAndFdrScoreBits(swept) == want, s"$name, lowerIsBetter=$lowerIsBetter")
+      assert(swept.columns.toSeq == df.columns.toSeq ++ Seq("q", "fdrScore"))
+      if (name == "no decoys") // no positive q: the repair gives NaN
+        assert(want.nonEmpty && want.forall(_._2 == java.lang.Double.doubleToLongBits(Double.NaN)))
+    }
   }
 }

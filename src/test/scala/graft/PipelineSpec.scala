@@ -2,7 +2,10 @@ package graft
 
 import graft.pipeline.{ClusterInference, IndexPipeline}
 import graft.pipeline.IndexPipeline.IndexConfig
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end micro-assay for the generate-index-files DAG (SURVEY §3.1)
@@ -271,6 +274,73 @@ class PipelineSpec extends AnyFunSuite {
       "p_exact" -> ("9", 1.0), // stage-1 scan-token equi-join
       "p_unique" -> ("foo7", 2.0), // rescued; keeps the PSM's own scanKey
     )) // p_ambig: 2 containing ids -> dropped; p_mgf: never id-rescued
+  }
+
+  /** Runs `body` and counts the Spark jobs it started on this thread. A
+    * sentinel job in the same job group flushes the listener bus, so every
+    * earlier job event has arrived before the count is read. */
+  private def jobsStartedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          started.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "body")
+    try {
+      val out = body
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!started.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.contains("sentinel"), "the listener bus never delivered the sentinel job")
+      (out, started.size - 1)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("J1 rescue over MGF-family spectra: no job, no pin, even when idFormat arrives through a join") {
+    val dir = java.nio.file.Files.createTempDirectory("rescue-mgf").toFile
+    val mgf = (0 to 1).map(i =>
+      s"BEGIN IONS\nTITLE=s$i\nPEPMASS=40$i.0\nCHARGE=2+\n100.0 10.0\n200.0 20.0\nEND IONS\n")
+    java.nio.file.Files.writeString(new java.io.File(dir, "a.mgf").toPath, mgf.mkString)
+    // the mzid command's shape: the id format is a column of the broadcast
+    // join with the parsed SpectraData, an RDD-backed frame the optimizer
+    // cannot evaluate — so the PSM side of the rescue never folds
+    val sd = spark.sparkContext.parallelize(Seq(("sd1", "a.mgf", MPL)))
+      .toDF("spectraDataId", "fileName", "idFormat")
+    val psmKeyed = Seq(("p1", "index=0", "sd1"), ("p2", "index=1", "sd1"), ("p3", "index=7", "sd1"))
+      .toDF("psmId", "sourceId", "spectraDataRef")
+      .join(broadcast(sd), col("spectraDataRef") === col("spectraDataId"))
+      .withColumn("scanKey", graft.functions.UsiFunctions.normalizeScanId(
+        col("sourceId"), col("idFormat")))
+    def keyed(spectra: DataFrame): DataFrame = spectra
+      .withColumn("scanKey", (col("index") + 1).cast("string"))
+      .withColumnRenamed("fileType", "spectrumFileType")
+      .select("fileName", "scanKey", "scanId", "spectrumFileType", "precursorMz")
+    val spectra = graft.pipeline.Commands.readSpectraDir(spark, dir.getPath)
+    def noProbe(name: String): Unit = {
+      val (out, jobs) = jobsStartedBy(IndexPipeline.scanKeyJoin(psmKeyed, keyed(spectra)))
+      assert(jobs == 0, s"$name spectra: the rescue probe ran $jobs job(s)")
+      assert(psmKeyed.storageLevel == StorageLevel.NONE, s"$name spectra: psmKeyed was pinned")
+      val got = out.select("psmId", "scanKey", "precursorMz").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).sortBy(_._1).toSeq
+      assert(got == Seq(("p1", "1", 400.0), ("p2", "2", 401.0)), s"$name spectra")
+    }
+    noProbe("plain")
+    // pinned, as a caller that reuses the spectra does: the cached plan is
+    // an opaque leaf, but the rescue must still be proven dead
+    spectra.persist(StorageLevel.MEMORY_AND_DISK).count()
+    try noProbe("persisted")
+    finally {
+      spectra.unpersist()
+      dir.listFiles().foreach(_.delete()); dir.delete()
+    }
   }
 
   private implicit class Tuples3(rows: Array[(String, String, Double)]) {
