@@ -92,7 +92,8 @@ object CorpusBench {
     // near/exact duplicates make every 10th doc share long 5-gram runs),
     // and BM25 retrieval against three mid-vocabulary terms.
     val (nSpans, tSpans) = time {
-      Dedup.duplicateSpans(docs, col("id"), col("text"), k = 5).count()
+      Dedup.duplicateSpans(docs, col("id"), col("text"), k = 5,
+        portableHash = true).count()
     }
     val (nSpansXx, tSpansXx) = time {
       Dedup.duplicateSpans(docs, col("id"), col("text"), k = 5,
@@ -273,7 +274,8 @@ object CorpusBench {
     // run; subquadratic = the gram shuffle + islands + slice join, never
     // a pair expansion (compare against n^2/2 = 1.25e11 pair checks)
     val (nSubSpans, tSubstr) = time {
-      Dedup.substringDedup(docs, col("id"), col("text"), k = 5).count()
+      Dedup.substringDedup(docs, col("id"), col("text"), k = 5,
+        portableHash = true).count()
     }
     val (nSubSpansXx, tSubstrXx) = time {
       Dedup.substringDedup(docs, col("id"), col("text"), k = 5,

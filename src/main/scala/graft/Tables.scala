@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -269,18 +270,24 @@ object Tables {
     * call, paid by every query construction and every bench repeat
     * (~306 queries × ≥2 repeats). The memo holds only the logical plan
     * (a catalog does exactly this); each ACTION still scans the parquet
-    * from disk, so no result or data is cached across runs. Keyed weakly
-    * by session so Bench/Verify/tests each get their own entry and a
-    * stopped session's memo is collectable. */
+    * from disk, so no result or data is cached across runs. Keyed by
+    * session so Bench/Verify/tests each get their own entry. The memoized
+    * frames hold their session, so a weak key would never clear: a
+    * session's entry is dropped when its SparkContext stops. */
   private val loadMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[(String, String), DataFrame]]()
+    scala.collection.mutable.Map.empty[SparkSession,
+      scala.collection.mutable.Map[(String, String), DataFrame]]
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     loadMemo.synchronized {
       loadMemo
-        .computeIfAbsent(spark,
-          _ => scala.collection.mutable.Map.empty[(String, String), DataFrame])
+        .getOrElseUpdate(spark, {
+          spark.sparkContext.addSparkListener(new SparkListener {
+            override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+              loadMemo.synchronized(loadMemo.remove(spark))
+          })
+          scala.collection.mutable.Map.empty[(String, String), DataFrame]
+        })
         .getOrElseUpdate((dir, name), {
           val path = s"$dir/$name.parquet"
           val raw = conform(name, readWithNanosFallback(spark, path))

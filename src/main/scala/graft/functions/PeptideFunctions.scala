@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 /** Peptide-domain functions (SURVEY.md §2.2 P6, P10, P12; §2.2 F10).
   *
   * Everything except the peptidoform codec is a pure `Column` expression;
-  * the codec is a Scala UDF (string-builder over a position map — the one
-  * place imperative code is genuinely simpler, per SURVEY §2.8).
+  * the codec is plain Scala (string-builder over a position map — the one
+  * place imperative code is genuinely simpler, per SURVEY §2.8) and the
+  * reference that the native [[EncodePeptidoformExpr]] is tested against.
   */
 object PeptideFunctions {
 
@@ -50,9 +51,6 @@ object PeptideFunctions {
 
   def removeChargeStateStr(peptidoform: String): String =
     peptidoform.replaceAll("/\\d+$", "")
-
-  val encodePsmUdf =
-    udf((seq: String, mods: Map[Int, String], charge: Int) => encodePsm(seq, mods, charge))
 
   // ----------------------------------------------------------- P10 cleavages
 

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import graft.fdr.TargetDecoy
 import graft.functions.{PeptideFunctions, UsiFunctions}
-import graft.model.{CvParam, IdentifiedModification, PositionProbability}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -112,24 +111,6 @@ object IndexPipeline {
   private def param(accession: String, name: String, value: Column): Column =
     struct(lit(accession).as("accession"), lit(name).as("name"),
       value.cast("string").as("value"))
-
-  /** P13 — positioned modification map -> IdentifiedModification structs,
-    * merging positions per accession
-    * (PrideAnalysisAssayService.convertPeptideModifications:1007-1047).
-    * Kept as a reference implementation and used by tests to pin the
-    * native expression's semantics; the pipeline itself uses the codegen
-    * [[graft.functions.ModsToStructsExpr]]. */
-  private[pipeline] val toIdentifiedMods =
-    udf((mods: Map[Int, String]) =>
-      if (mods == null) Seq.empty[IdentifiedModification]
-      else mods.toSeq.groupBy(_._2).toSeq.sortBy(_._1).map { case (acc, positions) =>
-        IdentifiedModification(
-          neutralLoss = None,
-          positionMap = positions.map(_._1).sorted
-            .map(p => PositionProbability(p, Seq.empty)),
-          modification = CvParam("UNIMOD", acc, acc, null),
-          properties = Seq.empty)
-      })
 
   /** Spectrum file types addressed by index, not by id (the MGF family). */
   private val IndexAddressedTypes = Seq("MGF", "PKL", "APL", "DTA", "MS2")

@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.io.{ArchiveJson, MzIdentMlIO, PrideRest}
 import graft.pipeline.FileRelations
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -186,6 +189,120 @@ class CommandsSpec extends AnyFunSuite {
     assert(s0.getAs[String]("usi") == "mzspec:PXDMZID:run1:index:1")
     assert(s0.getAs[String]("peptidoform") == "PEP[UNIMOD:35]TIDEK/2")
     assert(!s0.getAs[Boolean]("isDecoy"))
+  }
+
+  /** The mzIdentML fixture and a two-spectrum MGF directory under `dir`. */
+  private def mzidProject(dir: java.nio.file.Path): (String, String) = {
+    val mgfDir = Files.createDirectory(dir.resolve("mzid-spectra"))
+    write(mgfDir, "run1.mgf", mgfBlocks(2))
+    (write(dir, "assay.mzid", mzid), mgfDir.toString)
+  }
+
+  /** Every line (parquet: row) of every part file under `dir`, prefixed
+    * with the file's directory relative to `dir` (so partition directories
+    * count), sorted. */
+  private def partLines(dir: java.nio.file.Path): Seq[String] = {
+    val files = Files.walk(dir)
+    try files.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.startsWith("part-"))
+      .flatMap { p =>
+        val lines =
+          if (p.toString.endsWith(".parquet"))
+            spark.read.parquet(p.toString).collect().map(_.toString).toSeq
+          else Files.readAllLines(p).asScala.toSeq
+        lines.map(l => s"${dir.relativize(p.getParent)}\t$l")
+      }
+      .toSeq.sorted
+    finally files.close()
+  }
+
+  /** The CLI chain of the first test plus the mzid command, every command
+    * under the given interpreted-execution threshold; every written line. */
+  private def chainLines(interpretBelowBytes: Long): Seq[String] = {
+    val dir = Files.createTempDirectory("graft-scope")
+    val mztabPath = write(dir, "assay.mztab", mztab)
+    val mgfDir = Files.createDirectory(dir.resolve("spectra"))
+    write(mgfDir, "run1.mgf", mgfBlocks(4))
+    val (mzidPath, mzidSpectra) = mzidProject(dir)
+    val clusters = write(dir, "clusters.tsv", "out.mgf\t0\t7\nout.mgf\t1\t7\nout.mgf\t2\t9\n")
+    val out = dir.resolve("out")
+    def cli(args: String*): Unit = Cli.run(spark, args.toArray, interpretBelowBytes)
+    cli("generate-index-files", "--mztab", mztabPath, "--spectra", mgfDir.toString,
+      "--project-accession", "PXDCLI", "--qvalue-threshold", "0.05", "--min-psms", "1",
+      "--out", s"$out/index")
+    cli("spectra-json-check", "--spectra-json", s"$out/index/archive_spectra",
+      "--out", s"$out/checked")
+    cli("generate-mgf-files", "--spectra-json", s"$out/checked", "--out", s"$out/mgf")
+    cli("perform-inference", "--spectra-json", s"$out/checked", "--clusters", clusters,
+      "--out", s"$out/inference")
+    cli("generate-index-files", "--mzid", mzidPath, "--spectra", mzidSpectra,
+      "--project-accession", "PXDMZID", "--qvalue-threshold", "0.5", "--min-psms", "1",
+      "--score-lower-is-better", "--out", s"$out/mzid")
+    partLines(out)
+  }
+
+  test("interpreted and compiled commands write the same tables") {
+    val interpreted = chainLines(Long.MaxValue)
+    assert(interpreted.exists(_.startsWith("mzid/")) &&
+      interpreted.exists(_.startsWith("inference/")), interpreted.mkString("\n"))
+    assert(interpreted == chainLines(0L))
+  }
+
+  private val CodegenKeys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+
+  private def codegenState: Seq[(Boolean, Option[String])] =
+    CodegenKeys.map(k => (spark.conf.getAll.contains(k), spark.conf.getOption(k)))
+
+  test("a small command compiles no code, unless the caller chose codegen") {
+    val dir = Files.createTempDirectory("graft-nocompile")
+    val (mzidPath, mgfDir) = mzidProject(dir)
+    // each q-value threshold is a literal no earlier plan carried, so a
+    // compiled run misses the generated-code cache
+    def index(q: String, aboveThreshold: Boolean = false): Unit = {
+      val args = Array("generate-index-files", "--mzid", mzidPath, "--spectra", mgfDir,
+        "--project-accession", "PXDJIT", "--qvalue-threshold", q, "--min-psms", "1",
+        "--score-lower-is-better", "--out", dir.resolve(s"out-$q").toString)
+      if (aboveThreshold) Cli.run(spark, args, 0L) else Cli.run(spark, args)
+    }
+    def compilations: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val caller = codegenState
+    // the first interpreted command of a JVM still compiles the few
+    // project-invariant classes of paths that have no interpreted form
+    index("0.4701")
+    val before = compilations
+    index("0.4702")
+    assert(compilations == before)
+    assert(codegenState == caller)
+
+    // checked right after an interpreted run, which compiled nothing
+    CodegenKeys.zip(Seq("true", "FALLBACK")).foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      index("0.4703")
+      assert(compilations > before)
+    } finally CodegenKeys.foreach(spark.conf.unset)
+
+    // above the threshold the command compiles, as it always did
+    val explicit = compilations
+    index("0.4704", aboveThreshold = true)
+    assert(compilations > explicit)
+    assert(codegenState == caller)
+  }
+
+  test("Cli.run restores the caller's codegen settings when the command fails") {
+    val dir = Files.createTempDirectory("graft-restore")
+    val (mzidPath, mgfDir) = mzidProject(dir)
+    val noOut = Array("generate-index-files", "--mzid", mzidPath, "--spectra", mgfDir,
+      "--project-accession", "PXDFAIL")
+    val caller = codegenState
+    intercept[IllegalArgumentException](Cli.run(spark, noOut, Long.MaxValue))
+    assert(codegenState == caller)
+
+    spark.conf.set(CodegenKeys.head, "true")
+    try {
+      val explicit = codegenState
+      intercept[IllegalArgumentException](Cli.run(spark, noOut, Long.MaxValue))
+      assert(codegenState == explicit && explicit.head == (true, Some("true")))
+    } finally spark.conf.unset(CodegenKeys.head)
   }
 
   test("generate-index-files from PRIDE XML: self-contained legacy input") {
