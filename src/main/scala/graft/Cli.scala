@@ -1,11 +1,9 @@
 package graft
 
-import scala.util.Try
 import scala.util.control.NonFatal
 
 import graft.io.PrideRest
 import graft.pipeline.{Commands, IndexPipeline}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** CLI mirroring the reference's six commands
@@ -69,37 +67,13 @@ object Cli {
     finally spark.stop()
   }
 
-  /** Input bytes (see [[inputBytes]]) below which a command runs
-    * interpreted. Compiling is a fixed cost per generated class (~170 per
-    * generate-index-files), paid again by every project because no code is
-    * reused between projects, while the interpreter's cost grows with the
-    * rows. Measured on generated mzid + MGF projects at local[4]
-    * (PERF_interpreted.jsonl): interpreting was not slower at 100k and
-    * 200k PSMs (231 and 463 MB) and ~5% slower in wall at 400k (929 MB);
-    * the threshold admits the 200k-PSM project. */
-  private val InterpretBelowBytes: Long = 463L * 1000 * 1000
-
   /** Whole-stage codegen off, and every expression-level generator on its
     * interpreted form: the first alone still compiles ~160 classes per
     * project. `factoryMode` is an internal Spark conf; CommandsSpec pins
-    * that a small command then compiles nothing. */
+    * that a generate-index-files then compiles nothing. */
   private val InterpretedConfs = Seq(
     "spark.sql.codegen.wholeStage" -> "false",
     "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-
-  /** The bytes of a command's input files: the summed content summaries of
-    * its --mzid, --mztab, --pridexml, --spectra and --spectra-json paths
-    * (comma lists included). None when a path cannot be summarized, e.g. a
-    * glob or a missing file. */
-  private def inputBytes(spark: SparkSession, o: Map[String, String]): Option[Long] = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    Try(Seq("mzid", "mztab", "pridexml", "spectra", "spectra-json")
-      .flatMap(o.get).flatMap(_.split(",")).filter(_.nonEmpty).distinct
-      .map { p =>
-        val path = new Path(p)
-        path.getFileSystem(hadoopConf).getContentSummary(path).getLength
-      }.sum).toOption
-  }
 
   /** Runs `body` with `confs` set on the session, except the keys the caller
     * set explicitly, and unsets what it set afterwards, on failure too. When
@@ -120,19 +94,23 @@ object Cli {
     try body finally set.foreach(spark.conf.unset)
   }
 
-  /** Runs one command. A command whose input files total less than
-    * [[InterpretBelowBytes]] runs with [[InterpretedConfs]], for that
-    * command only; a codegen conf the caller set explicitly wins. */
-  def run(spark: SparkSession, args: Array[String]): Unit =
-    run(spark, args, InterpretBelowBytes)
+  /** The one command whose interpreted run was measured. Compiled, a
+    * generate-index-files compiles ~170 classes, and the next project reuses
+    * none of them. Interpreted, the benchmark's projects (up to 15k PSMs)
+    * take ~30% less CPU and ~25% less wall; the largest generated project
+    * measured, 400k PSMs, took ~4% less CPU and ~4% more wall
+    * (`PERF_interpreted.jsonl`). The other commands compile: none was
+    * measured interpreted. */
+  private val InterpretedCommand = "generate-index-files"
 
-  /** [[run]] with the interpreted-execution threshold as a parameter:
-    * `Long.MaxValue` interprets every command, `0` none. */
-  private[graft] def run(spark: SparkSession, args: Array[String],
-      interpretBelowBytes: Long): Unit = {
+  /** Runs one command. A generate-index-files runs with
+    * [[InterpretedConfs]], for that command only; a codegen conf the caller
+    * set explicitly wins. */
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val o = parseArgs(args)
-    val interpret = inputBytes(spark, o).exists(_ < interpretBelowBytes)
-    withConfs(spark, if (interpret) InterpretedConfs else Nil)(dispatch(spark, args.head, o))
+    val cmd = args.head
+    withConfs(spark, if (cmd == InterpretedCommand) InterpretedConfs else Nil)(
+      dispatch(spark, cmd, o))
   }
 
   private def dispatch(spark: SparkSession, cmd: String, o: Map[String, String]): Unit = {

@@ -216,9 +216,18 @@ class CommandsSpec extends AnyFunSuite {
     finally files.close()
   }
 
-  /** The CLI chain of the first test plus the mzid command, every command
-    * under the given interpreted-execution threshold; every written line. */
-  private def chainLines(interpretBelowBytes: Long): Seq[String] = {
+  private val CodegenKeys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+
+  /** `body` with Spark's default codegen settings set explicitly, which
+    * `Cli.run` leaves alone: every command runs compiled. */
+  private def compiled[T](body: => T): T = {
+    CodegenKeys.zip(Seq("true", "FALLBACK")).foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally CodegenKeys.foreach(spark.conf.unset)
+  }
+
+  /** The CLI chain of the first test plus the mzid command; every written
+    * line. */
+  private def chainLines(): Seq[String] = {
     val dir = Files.createTempDirectory("graft-scope")
     val mztabPath = write(dir, "assay.mztab", mztab)
     val mgfDir = Files.createDirectory(dir.resolve("spectra"))
@@ -226,7 +235,7 @@ class CommandsSpec extends AnyFunSuite {
     val (mzidPath, mzidSpectra) = mzidProject(dir)
     val clusters = write(dir, "clusters.tsv", "out.mgf\t0\t7\nout.mgf\t1\t7\nout.mgf\t2\t9\n")
     val out = dir.resolve("out")
-    def cli(args: String*): Unit = Cli.run(spark, args.toArray, interpretBelowBytes)
+    def cli(args: String*): Unit = Cli.run(spark, args.toArray)
     cli("generate-index-files", "--mztab", mztabPath, "--spectra", mgfDir.toString,
       "--project-accession", "PXDCLI", "--qvalue-threshold", "0.05", "--min-psms", "1",
       "--out", s"$out/index")
@@ -242,28 +251,24 @@ class CommandsSpec extends AnyFunSuite {
   }
 
   test("interpreted and compiled commands write the same tables") {
-    val interpreted = chainLines(Long.MaxValue)
+    val interpreted = chainLines()
     assert(interpreted.exists(_.startsWith("mzid/")) &&
       interpreted.exists(_.startsWith("inference/")), interpreted.mkString("\n"))
-    assert(interpreted == chainLines(0L))
+    assert(interpreted == compiled(chainLines()))
   }
-
-  private val CodegenKeys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
 
   private def codegenState: Seq[(Boolean, Option[String])] =
     CodegenKeys.map(k => (spark.conf.getAll.contains(k), spark.conf.getOption(k)))
 
-  test("a small command compiles no code, unless the caller chose codegen") {
+  test("generate-index-files compiles no code, unless the caller chose codegen") {
     val dir = Files.createTempDirectory("graft-nocompile")
     val (mzidPath, mgfDir) = mzidProject(dir)
     // each q-value threshold is a literal no earlier plan carried, so a
     // compiled run misses the generated-code cache
-    def index(q: String, aboveThreshold: Boolean = false): Unit = {
-      val args = Array("generate-index-files", "--mzid", mzidPath, "--spectra", mgfDir,
+    def index(q: String): Unit =
+      Cli.run(spark, Array("generate-index-files", "--mzid", mzidPath, "--spectra", mgfDir,
         "--project-accession", "PXDJIT", "--qvalue-threshold", q, "--min-psms", "1",
-        "--score-lower-is-better", "--out", dir.resolve(s"out-$q").toString)
-      if (aboveThreshold) Cli.run(spark, args, 0L) else Cli.run(spark, args)
-    }
+        "--score-lower-is-better", "--out", dir.resolve(s"out-$q").toString))
     def compilations: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val caller = codegenState
     // the first interpreted command of a JVM still compiles the few
@@ -275,16 +280,8 @@ class CommandsSpec extends AnyFunSuite {
     assert(codegenState == caller)
 
     // checked right after an interpreted run, which compiled nothing
-    CodegenKeys.zip(Seq("true", "FALLBACK")).foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      index("0.4703")
-      assert(compilations > before)
-    } finally CodegenKeys.foreach(spark.conf.unset)
-
-    // above the threshold the command compiles, as it always did
-    val explicit = compilations
-    index("0.4704", aboveThreshold = true)
-    assert(compilations > explicit)
+    compiled(index("0.4703"))
+    assert(compilations > before)
     assert(codegenState == caller)
   }
 
@@ -294,13 +291,13 @@ class CommandsSpec extends AnyFunSuite {
     val noOut = Array("generate-index-files", "--mzid", mzidPath, "--spectra", mgfDir,
       "--project-accession", "PXDFAIL")
     val caller = codegenState
-    intercept[IllegalArgumentException](Cli.run(spark, noOut, Long.MaxValue))
+    intercept[IllegalArgumentException](Cli.run(spark, noOut))
     assert(codegenState == caller)
 
     spark.conf.set(CodegenKeys.head, "true")
     try {
       val explicit = codegenState
-      intercept[IllegalArgumentException](Cli.run(spark, noOut, Long.MaxValue))
+      intercept[IllegalArgumentException](Cli.run(spark, noOut))
       assert(codegenState == explicit && explicit.head == (true, Some("true")))
     } finally spark.conf.unset(CodegenKeys.head)
   }
