@@ -162,12 +162,15 @@ object Cli {
             throw new IllegalArgumentException(
               s"${many.map("--" + _._1).mkString(" and ")} are mutually exclusive\n$usage")
         }
-        println(s"[graft] nr_psms=${out.nrPsms} nr_decoys=${out.nrDecoys}")
-        // F9 assay gate (PrideAnalysisAssayService.java:477-480)
-        if (out.nrDecoys == 0)
-          System.err.println("[graft] WARNING: no decoys found — assay invalid under F9")
-        if (out.nrPsms <= cfg.minPsms)
-          System.err.println(s"[graft] WARNING: psms <= ${cfg.minPsms} — assay below minPSMs gate")
+        // the outputs are written; release their persisted frames
+        try {
+          println(s"[graft] nr_psms=${out.nrPsms} nr_decoys=${out.nrDecoys}")
+          // F9 assay gate (PrideAnalysisAssayService.java:477-480)
+          if (out.nrDecoys == 0)
+            System.err.println("[graft] WARNING: no decoys found — assay invalid under F9")
+          if (out.nrPsms <= cfg.minPsms)
+            System.err.println(s"[graft] WARNING: psms <= ${cfg.minPsms} — assay below minPSMs gate")
+        } finally out.unpersist()
 
       case "perform-inference" =>
         if (o.contains("native-cluster")) {

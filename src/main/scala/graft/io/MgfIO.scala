@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.functions.MgfBlockExpr
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,11 +12,12 @@ import org.apache.spark.sql.functions._
   * becomes a `DataFrame` of spectra with an explicit 0-based per-file
   * `index` column, and the reference's point lookups become joins (J1).
   *
-  * Reading is splittable: `lineSep = "END IONS"` chunks the file at block
-  * boundaries, so a 100 GB MGF parallelizes across tasks; the per-file
-  * index is recovered with a window over `monotonically_increasing_id()`
-  * (file splits are enumerated in offset order by the text source, so the
-  * id is monotone within a file).
+  * Both readers cut a file into `END IONS`-delimited chunks and parse each
+  * chunk with one native kernel, [[MgfBlockExpr]], in the scan stage. The
+  * per-file index is a `row_number` over the parsed rows ordered by chunk
+  * position, so the window's exchange carries parsed spectra and parses
+  * nothing. A malformed header or peak number becomes null, never a cast
+  * error (the F12 validity gate then sees the spectrum).
   */
 object MgfIO {
 
@@ -24,96 +26,59 @@ object MgfIO {
     * precursorCharge, retentionTime, masses, intensities). */
   def read(spark: SparkSession, path: String): DataFrame = readPaths(spark, Seq(path))
 
-  def readPaths(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val raw = spark.read.option("lineSep", "END IONS").text(paths: _*)
-      .withColumn("fileName", regexp_replace(input_file_name(), ".*/", ""))
-      .withColumn("_mid", monotonically_increasing_id())
-      // CRLF robustness: strip \r once so line parsing sees clean \n blocks.
-      .withColumn("value", regexp_replace(col("value"), "\r", ""))
-      .filter(col("value").contains("BEGIN IONS"))
+  /** Splittable: `lineSep = "END IONS"` chunks the file at block
+    * boundaries, so a 100 GB MGF parses across tasks. Chunk position is
+    * `monotonically_increasing_id()`, which is monotone within a file
+    * because the text source enumerates file splits in offset order. */
+  def readPaths(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spectra(spark, spark.read.option("lineSep", "END IONS").text(paths: _*).select(
+      regexp_replace(input_file_name(), ".*/", "").as("fileName"),
+      monotonically_increasing_id().as("_chunk"),
+      col("value")))
 
-    val lines = split(col("value"), "\n")
-    def headerVal(key: String): Column = {
-      val hits = filter(lines, l => l.startsWith(s"$key="))
-      when(size(hits) > 0, regexp_replace(element_at(hits, 1), s"^$key=", ""))
-    }
+  /** Exact-index variant: reads each file WHOLE in one task
+    * (`wholeTextFiles`), so chunk positions, and with them the 0-based
+    * per-file index, are exact by construction rather than by split
+    * ordering. Use for the positional cluster contract (J4) and
+    * small-to-medium files; [[read]] is the path for huge single files.
+    * Rows equal [[readPaths]]'s: the same chunks, the same kernel. */
+  def readExact(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    spectra(spark, spark.sparkContext
+      .wholeTextFiles(path)
+      .flatMap { case (file, content) =>
+        val name = file.replaceAll(".*/", "")
+        content.split("END IONS", -1).iterator.zipWithIndex
+          .map { case (chunk, i) => (name, i.toLong, chunk) }
+      }
+      .toDF("fileName", "_chunk", "value"))
+  }
 
-    val peakLines = filter(lines, l => l.rlike("^\\s*[0-9][0-9.eE+-]*[ \\t]+[0-9]"))
-    val chargeRaw = headerVal("CHARGE")
-    val w = Window.partitionBy(col("fileName")).orderBy(col("_mid"))
-
-    raw
+  /** (fileName, _chunk, value) chunks -> spectra rows, numbered per file
+    * in `_chunk` order. `explode` evaluates the kernel once per chunk and
+    * emits no row for a chunk without a block (IoSpec pins the single
+    * evaluation on the optimized plan). Unlike `inline`, an empty input
+    * propagates through `explode`, so a filter that folds to false on the
+    * readers' literal `fileType` still empties the plan (the J1 rescue's
+    * `provablyEmpty`). */
+  private def spectra(spark: SparkSession, chunks: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("fileName")).orderBy(col("_chunk"))
+    chunks
+      .select(col("fileName"), col("_chunk"),
+        explode(MgfBlockExpr.parseCol(spark, col("value"))).as("_p"))
       .withColumn("index", row_number().over(w).cast("long") - 1)
       .select(
         col("fileName"),
         col("index"),
         col("index").cast("string").as("scanId"),
-        coalesce(headerVal("TITLE"), lit("")).as("title"),
+        col("_p.title"),
         lit(2).as("msLevel"),
-        regexp_extract(headerVal("PEPMASS"), "^([0-9.eE+-]+)", 1).cast("double")
-          .as("precursorMz"),
-        // "2+", "2.0+", "3-" -> signed int
-        (regexp_extract(chargeRaw, "^([0-9.]+)", 1).cast("double") *
-          when(chargeRaw.endsWith("-"), -1).otherwise(1)).cast("int")
-          .as("precursorCharge"),
-        headerVal("RTINSECONDS").cast("double").as("retentionTime"),
-        // Columns 1 and 2 of the peak line, like [[parseBlocks]] — an
-        // end-anchored intensity regex would grab the CHARGE column of a
-        // 3-column "m/z intensity charge" peak line instead of column 2.
-        transform(peakLines, l =>
-          element_at(split(trim(l), "[ \\t]+"), 1).cast("double")).as("masses"),
-        transform(peakLines, l =>
-          element_at(split(trim(l), "[ \\t]+"), 2).cast("double"))
-          .as("intensities"),
+        col("_p.precursorMz"),
+        col("_p.precursorCharge"),
+        col("_p.retentionTime"),
+        col("_p.masses"),
+        col("_p.intensities"),
       )
-  }
-
-  /** Scala-side MGF block parser (shared by [[readExact]]); semantics
-    * mirror the column-expression parser in [[readPaths]]. */
-  private[io] def parseBlocks(fileName: String, content: String): Seq[(
-      String, Long, String, String, Int, Option[Double], Option[Int], Option[Double],
-      Seq[Double], Seq[Double])] = {
-    val blocks = content.replace("\r", "").split("END IONS")
-      .filter(_.contains("BEGIN IONS"))
-    blocks.zipWithIndex.map { case (block, idx) =>
-      val lines = block.split("\n")
-      def header(key: String): Option[String] =
-        lines.find(_.startsWith(s"$key=")).map(_.substring(key.length + 1))
-      val peakLines = lines.filter(_.matches("^\\s*[0-9][0-9.eE+-]*[ \\t]+[0-9].*"))
-      val peaks = peakLines.map { l =>
-        val parts = l.trim.split("[ \\t]+")
-        (parts(0).toDouble, parts(1).toDouble)
-      }
-      // Missing/malformed headers become nulls — identical to the
-      // column-expression parser (readPaths), so the F12 validity gate
-      // sees the same rows either way.
-      val charge = header("CHARGE").flatMap { c =>
-        val mag = c.takeWhile(ch => ch.isDigit || ch == '.')
-        val sign = if (c.endsWith("-")) -1 else 1
-        mag.toDoubleOption.map(m => (m * sign).toInt)
-      }
-      (fileName, idx.toLong, idx.toString, header("TITLE").getOrElse(""), 2,
-        header("PEPMASS").flatMap(_.split("\\s+").headOption).flatMap(_.toDoubleOption),
-        charge,
-        header("RTINSECONDS").flatMap(_.toDoubleOption),
-        peaks.map(_._1).toSeq, peaks.map(_._2).toSeq)
-    }.toSeq
-  }
-
-  /** Exact-index variant: parses each file WHOLE in one task
-    * (`wholeTextFiles`), so the 0-based per-file index is guaranteed by
-    * construction rather than by split ordering. Use for the positional
-    * cluster contract (J4) and small-to-medium files; the splittable
-    * [[read]] is the path for huge single files. */
-  def readExact(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.sparkContext
-      .wholeTextFiles(path)
-      .flatMap { case (file, content) =>
-        parseBlocks(file.replaceAll(".*/", ""), content)
-      }
-      .toDF("fileName", "index", "scanId", "title", "msLevel", "precursorMz",
-        "precursorCharge", "retentionTime", "masses", "intensities")
   }
 
   /** K3 — format spectra as MGF blocks, byte-compatible with the reference

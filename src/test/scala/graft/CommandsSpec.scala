@@ -302,6 +302,17 @@ class CommandsSpec extends AnyFunSuite {
     } finally spark.conf.unset(CodegenKeys.head)
   }
 
+  test("generate-index-files releases what it persisted") {
+    val dir = Files.createTempDirectory("graft-release")
+    val (mzidPath, mgfDir) = mzidProject(dir)
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    Cli.run(spark, Array("generate-index-files", "--mzid", mzidPath, "--spectra", mgfDir,
+      "--project-accession", "PXDREL", "--qvalue-threshold", "0.5", "--min-psms", "1",
+      "--score-lower-is-better", "--out", dir.resolve("out").toString))
+    assert(persisted == before)
+  }
+
   test("generate-index-files from PRIDE XML: self-contained legacy input") {
     val dir = Files.createTempDirectory("graft-pridexml-cli")
     val xml = write(dir, "legacy_ident.xml", graft.pipeline.DemoFixtures.prideXmlIdent)

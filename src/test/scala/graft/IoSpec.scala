@@ -87,6 +87,121 @@ class IoSpec extends AnyFunSuite {
     assert(a.toSeq == b.toSeq)
   }
 
+  /** `body` with the two codegen confs set, then unset. */
+  private def withCodegen[T](wholeStage: String, factoryMode: String)(body: => T): T = {
+    spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+    spark.conf.set("spark.sql.codegen.factoryMode", factoryMode)
+    try body
+    finally Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+      .foreach(spark.conf.unset)
+  }
+
+  /** A seeded hostile MGF: CRLF or LF, missing, empty and repeated
+    * headers, leading spaces, 2- and 3-column peaks, exponents and long
+    * digit strings, signed and fractional charges, zero-peak blocks and
+    * text between blocks (some of it peak-shaped). */
+  private def generatedMgf(rnd: scala.util.Random, blocks: Int, eol: String): String = {
+    def pick[A](xs: A*): A = xs(rnd.nextInt(xs.size))
+    def num(): String = pick(
+      f"${rnd.nextDouble() * 2000}%.4f", f"${rnd.nextDouble() * 100}%.1f",
+      rnd.nextInt(5000).toString, f"${rnd.nextDouble() * 10}%.3fe${rnd.nextInt(4)}",
+      f"${rnd.nextDouble()}%.2fE-${rnd.nextInt(3)}", "123.45678901234567", s"${rnd.nextInt(99)}.")
+    val values = Map[String, () => String](
+      "TITLE" -> (() => pick(s"id=scan${rnd.nextInt(1000)}", "", "a=b, c")),
+      "PEPMASS" -> (() => pick(num(), s"${num()} ${num()}", s"${num()}\t${num()}", "")),
+      "CHARGE" -> (() => pick("2+", "3-", "2.0+", "1", "4+", "", " 2+")),
+      "RTINSECONDS" -> (() => pick(num(), "")))
+    val out = new StringBuilder
+    (0 until blocks).foreach { _ =>
+      if (rnd.nextInt(4) == 0) out ++= pick("MASS=Monoisotopic", "", "# note", "999 1") + eol
+      val headers = values.toSeq.flatMap { case (k, v) =>
+        Seq.fill(pick(0, 1, 1, 1, 2))(s"$k=${v()}")
+      }
+      val peaks = Seq.fill(pick(0, 1, 3, 6)) {
+        pick("", " ", "   ") + num() + pick(" ", "\t", " \t ") + num() +
+          pick("", "", s"\t${rnd.nextInt(3) + 1}")
+      }
+      out ++= ("BEGIN IONS" +: rnd.shuffle(headers) ++: peaks :+ "END IONS").mkString(eol) + eol
+    }
+    if (rnd.nextBoolean()) out ++= "TITLE=orphan" + eol
+    out.toString
+  }
+
+  test("MGF kernel equals the column-expression parser, interpreted and compiled") {
+    val dir = Files.createTempDirectory("graft-mgf-prop")
+    val rnd = new scala.util.Random(20261019)
+    Seq("\r\n", "\n", "\n").zipWithIndex.foreach { case (eol, f) =>
+      Files.writeString(dir.resolve(s"run$f.mgf"), generatedMgf(rnd, 60, eol))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("fileName", "index").collect().map(_.toSeq).toSeq
+    // the oracle's ANSI casts fail on the malformed numbers the generator
+    // writes; non-ANSI, they are null, as in the kernel
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    val (oracleSchema, want) =
+      try {
+        val oracle = MgfColumnParser.readPaths(spark, Seq(dir.toString))
+        (oracle.schema, rows(oracle))
+      } finally spark.conf.unset("spark.sql.ansi.enabled")
+    assert(want.size >= 150 && want.exists(r => r(8).asInstanceOf[scala.collection.Seq[_]].isEmpty))
+    val interpreted = withCodegen("false", "NO_CODEGEN") {
+      val df = MgfIO.read(spark, dir.toString)
+      assert(df.schema == oracleSchema)
+      rows(df)
+    }
+    assert(interpreted == want)
+    val compiled = withCodegen("true", "CODEGEN_ONLY") {
+      val df = MgfIO.read(spark, dir.toString).orderBy("fileName", "index")
+      val got = df.collect().map(_.toSeq).toSeq
+      assert(org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan)
+        .contains("graft.functions.MgfBlockExpr.parse("))
+      got
+    }
+    assert(compiled == want)
+  }
+
+  test("MGF kernel runs once per chunk, below the per-file window's exchange") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def kernels(exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Int =
+      exprs.map(_.collect { case k: graft.functions.MgfBlockExpr => k }.size).sum
+    val df = MgfIO.read(spark, tmpFile("once.mgf", mgf))
+    val plan = df.queryExecution.optimizedPlan
+    assert(plan.collect { case p: LogicalPlan => kernels(p.expressions) }.sum == 1, plan)
+    val window = plan.collectFirst { case w: Window => w }.get
+    assert(window.child.exists(p => kernels(p.expressions) == 1), plan)
+
+    df.collect()
+    object Aqe extends AdaptiveSparkPlanHelper
+    val exec = df.queryExecution.executedPlan
+    assert(Aqe.collect(exec) { case p: SparkPlan => kernels(p.expressions) }.sum == 1, exec)
+    val exchanges = Aqe.collect(exec) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.exists(_.child.exists(p => kernels(p.expressions) == 1)), exec)
+  }
+
+  test("MGF malformed numbers become nulls on both readers; tab-indented peaks parse") {
+    val hostile = Seq(
+      "BEGIN IONS", "TITLE=hostile", "PEPMASS=abc", "CHARGE=x+", "RTINSECONDS=n/a",
+      "\t100.5 200.25", "101.5 2x0", "1.2.3\t7.0", "END IONS",
+      "BEGIN IONS", "PEPMASS=", "CHARGE=99999999999+", "RTINSECONDS=12.5", "END IONS", "",
+    ).mkString("\n")
+    val path = tmpFile("hostile.mgf", hostile)
+    for (df <- Seq(MgfIO.read(spark, path), MgfIO.readExact(spark, path))) {
+      val rows = df.orderBy("index").collect()
+      assert(rows.length == 2)
+      val r0 = rows(0)
+      assert(r0.getAs[String]("title") == "hostile")
+      Seq("precursorMz", "precursorCharge", "retentionTime").foreach(c => assert(r0.isNullAt(r0.fieldIndex(c)), c))
+      assert(r0.getSeq[Any](r0.fieldIndex("masses")) == Seq(100.5, 101.5, null))
+      assert(r0.getSeq[Any](r0.fieldIndex("intensities")) == Seq(200.25, null, 7.0))
+      val r1 = rows(1)
+      assert(r1.isNullAt(r1.fieldIndex("precursorMz")) && r1.isNullAt(r1.fieldIndex("precursorCharge")))
+      assert(r1.getAs[Double]("retentionTime") == 12.5 && r1.getAs[String]("title") == "")
+    }
+  }
+
   test("MGF writer: block format matches the reference writer shape") {
     import spark.implicits._
     val df = Seq(
