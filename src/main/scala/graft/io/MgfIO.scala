@@ -31,7 +31,7 @@ object MgfIO {
     * `monotonically_increasing_id()`, which is monotone within a file
     * because the text source enumerates file splits in offset order. */
   def readPaths(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spectra(spark, spark.read.option("lineSep", "END IONS").text(paths: _*).select(
+    spectra(spark.read.option("lineSep", "END IONS").text(paths: _*).select(
       regexp_replace(input_file_name(), ".*/", "").as("fileName"),
       monotonically_increasing_id().as("_chunk"),
       col("value")))
@@ -44,7 +44,7 @@ object MgfIO {
     * Rows equal [[readPaths]]'s: the same chunks, the same kernel. */
   def readExact(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    spectra(spark, spark.sparkContext
+    spectra(spark.sparkContext
       .wholeTextFiles(path)
       .flatMap { case (file, content) =>
         val name = file.replaceAll(".*/", "")
@@ -61,11 +61,11 @@ object MgfIO {
     * propagates through `explode`, so a filter that folds to false on the
     * readers' literal `fileType` still empties the plan (the J1 rescue's
     * `provablyEmpty`). */
-  private def spectra(spark: SparkSession, chunks: DataFrame): DataFrame = {
+  private def spectra(chunks: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("fileName")).orderBy(col("_chunk"))
     chunks
       .select(col("fileName"), col("_chunk"),
-        explode(MgfBlockExpr.parseCol(spark, col("value"))).as("_p"))
+        explode(MgfBlockExpr.parseCol(chunks.sparkSession, col("value"))).as("_p"))
       .withColumn("index", row_number().over(w).cast("long") - 1)
       .select(
         col("fileName"),
