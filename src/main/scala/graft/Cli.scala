@@ -17,15 +17,33 @@ object Cli {
     * fail loudly, not write the index to a directory literally named
     * `true`. An explicit `--flag false` stays supported. */
   private[graft] val BooleanFlags: Set[String] = Set(
-    "score-lower-is-better", "distributed-fdr", "picked-protein-fdr",
-    "protein-score-from-fdrscore", "exact-mgf", "native-cluster")
+    "score-lower-is-better", "picked-protein-fdr", "protein-score-from-fdrscore",
+    "native-cluster")
+
+  /** The options each command reads. Any other option is an ERROR: a
+    * misspelt `--qvalue-treshold 0.05`, if dropped, would ship the index
+    * at the default q <= 0.01. */
+  private val CommandOptions: Map[String, Set[String]] = Map(
+    "generate-index-files" -> Set("mztab", "mzid", "pridexml", "spectra", "out",
+      "project-accession", "assay-accession", "reanalysis-accession", "qvalue-threshold",
+      "protein-qvalue-threshold", "peptide-length", "min-psms", "unique-peptides",
+      "score-lower-is-better", "picked-protein-fdr", "protein-score-from-fdrscore",
+      "decoy-prefix", "sdrf", "global-sample-props"),
+    "perform-inference" -> Set("spectra-json", "out", "clusters", "native-cluster",
+      "precursor-tol", "min-cosine", "index"),
+    "generate-mgf-files" -> Set("spectra-json", "out"),
+    "spectra-json-check" -> Set("spectra-json", "out"),
+    "get-result-files" -> Set("project-accession", "out"),
+    "get-related-files" -> Set("project-accession", "mzid", "out"))
 
   /** Strict `--key value` / bare `--flag` parser: a stray non-option token
     * or a mis-paired window is an ERROR, not a silent drop — the old
     * sliding(2,2) form silently discarded a trailing bare flag (shipping
     * an index without the option the operator asked for). Only options in
-    * [[BooleanFlags]] may omit their value. */
+    * [[BooleanFlags]] may omit their value, and a known command accepts
+    * only its [[CommandOptions]]. */
   private[graft] def parseArgs(args: Array[String]): Map[String, String] = {
+    val known = CommandOptions.get(args.head)
     val out = scala.collection.mutable.LinkedHashMap.empty[String, String]
     var i = 1
     while (i < args.length) {
@@ -33,6 +51,7 @@ object Cli {
       require(k.startsWith("--"),
         s"unexpected argument '$k' (options are --key value)\n$usage")
       val key = k.stripPrefix("--")
+      require(known.forall(_(key)), s"unknown option $k for ${args.head}\n$usage")
       if (i + 1 < args.length && !args(i + 1).startsWith("--")) {
         out(key) = args(i + 1); i += 2
       } else {
@@ -129,7 +148,6 @@ object Cli {
           minPsms = o.get("min-psms").map(_.toLong).getOrElse(1000L),
           uniquePeptides = o.get("unique-peptides").map(_.toInt).getOrElse(0),
           scoreLowerIsBetter = o.get("score-lower-is-better").exists(_.toBoolean),
-          distributedFdr = o.get("distributed-fdr").exists(_.toBoolean),
           pickedProteinFdr = o.get("picked-protein-fdr").exists(_.toBoolean),
           proteinScoreFromPsmFdrScore =
             o.get("protein-score-from-fdrscore").exists(_.toBoolean),
@@ -139,16 +157,15 @@ object Cli {
             .map { kv => val parts = kv.split("=", 2); (parts(0).trim, parts(1).trim) })
             .getOrElse(Seq.empty),
         )
-        val exactMgf = o.get("exact-mgf").exists(_.toBoolean)
         val inputs = Seq("mztab", "mzid", "pridexml").flatMap(k => o.get(k).map(k -> _))
         val out = inputs match {
           case Seq(("mztab", mztab)) =>
             Commands.generateIndexFiles(
-              spark, mztab, req("spectra"), req("out"), cfg, o.get("sdrf"), exactMgf)
+              spark, mztab, req("spectra"), req("out"), cfg, o.get("sdrf"))
           case Seq(("mzid", mzid)) =>
             Commands.generateIndexFilesFromMzid(
               spark, mzid.split(",").toSeq, req("spectra"), req("out"), cfg,
-              o.get("sdrf"), exactMgf)
+              o.get("sdrf"))
           case Seq(("pridexml", xml)) =>
             // PRIDE XML is self-contained (spectra + identifications in one
             // file): --spectra is optional and defaults to the result files
@@ -217,10 +234,9 @@ object Cli {
       |                       [--qvalue-threshold 0.01] [--peptide-length 7]
       |                       [--protein-qvalue-threshold 0.01]
       |                       [--min-psms 1000] [--score-lower-is-better]
-      |                       [--unique-peptides 0] [--distributed-fdr]
-      |                       [--picked-protein-fdr]
+      |                       [--unique-peptides 0] [--picked-protein-fdr]
       |                       [--protein-score-from-fdrscore]
-      |                       [--exact-mgf] [--sdrf F] [--decoy-prefix DECOY_]
+      |                       [--sdrf F] [--decoy-prefix DECOY_]
       |                       --out DIR
       |                       [--global-sample-props "organism=Homo sapiens;disease=..."]
       |  perform-inference   --spectra-json DIR --out DIR

@@ -64,10 +64,10 @@ object CombinedFdr {
       .drop("_rn", "_r0", "_q0", "_r1", "_q1")
   }
 
-  /** FDR Score from already-computed running counts — the distributed-safe
+  /** FDR Score from already-computed running counts — the window-free
     * form of [[withFdrScore]] for a frame that already carries
-    * `cum_decoys`, `cum_targets`, `q_value` (TargetDecoy.withQValues OR
-    * withQValuesGlobal output, pre-repair).
+    * `cum_decoys`, `cum_targets`, `q_value` (TargetDecoy.withQValues
+    * output, pre-repair).
     *
     * The rank interpolation needs no ordered window: rows with
     * `cum_decoys = k` sit between the k-th and (k+1)-th decoy in
@@ -76,8 +76,7 @@ object CombinedFdr {
     * step k — (0,0) ahead of the first decoy — and (r1,q1) is step k+1 —
     * absent past the last decoy, where the row keeps its q-value. Two
     * equi-joins against the one-row-per-decoy step table replace the
-    * global window, so the plan stays fully parallel on a
-    * range-partitioned global FDR output.
+    * global window.
     *
     * For a PER-GROUP q-value frame (withQValues with non-empty
     * partitionBy) pass the group column NAMES in `groupCols` — the step

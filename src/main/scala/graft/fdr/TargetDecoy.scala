@@ -67,138 +67,11 @@ object TargetDecoy {
       .withColumn("q_value", min(col("fdr")).over(wWorst))
   }
 
-  /** Distributed global target-decoy q-values — the scale path for a
-    * single huge assay, where `withQValues(partitionBy = empty)` would
-    * funnel everything through ONE window partition.
-    *
-    * Algorithm (exact, same results as the window form):
-    *  1. total-order the PSMs via `repartitionByRange` + in-partition sort
-    *     (parallel range sort, no single-partition stage);
-    *  2. pass A: per-partition decoy/target subtotals -> driver (one tiny
-    *     row per partition) -> prefix offsets;
-    *  3. pass B: running counts + offsets give exact cumulative
-    *     decoys/targets and FDR per row, plus per-partition FDR minima;
-    *  4. suffix-minima of the partition minima close the q-value
-    *     (reverse running min) across partitions; within a partition the
-    *     suffix min is computed backwards in one buffered sweep.
-    *
-    * Rows per partition stay bounded by the range partitioning, so this
-    * scales to arbitrarily large assays; the only driver state is two
-    * arrays of numPartitions elements. */
-  def withQValuesGlobal(
-      df: DataFrame,
-      score: Column,
-      isDecoy: Column,
-      tieBreak: Column,
-      lowerIsBetter: Boolean = false,
-      numPartitions: Int = 0,
-  ): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-
-    val n = if (numPartitions > 0) numPartitions
-      else df.sparkSession.sparkContext.defaultParallelism
-    // same null-symmetric ordering as the window form (nulls rank worst)
-    val bestFirst =
-      if (lowerIsBetter) Seq(score.asc_nulls_last, tieBreak.asc)
-      else Seq(score.desc, tieBreak.asc)
-
-    // Output-column hygiene, matching the window form's overwrite
-    // semantics: pre-existing result columns are replaced, not duplicated
-    // (schema.add below would otherwise produce two `fdr`s and ambiguous
-    // downstream references). The internal decoy marker uses a reserved
-    // name we refuse to clobber silently.
-    require(!df.columns.contains("_td_decoy"),
-      "withQValuesGlobal: input already has a _td_decoy column (reserved)")
-    val cleaned = df.drop("cum_decoys", "cum_targets", "fdr", "q_value")
-    // null decoy flags count as targets, matching the window form's
-    // when(isDecoy, 1).otherwise(0) semantics (and avoiding an NPE in the
-    // primitive getBoolean below)
-    val marked = cleaned.withColumn("_td_decoy", coalesce(isDecoy, lit(false)))
-    val sorted = marked
-      .repartitionByRange(n, bestFirst: _*)
-      .sortWithinPartitions(bestFirst: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val decoyIdx = sorted.schema.fieldIndex("_td_decoy")
-
-    // pass A: per-partition (decoys, targets)
-    val subtotals = sorted.rdd
-      .mapPartitionsWithIndex { (pid, rows) =>
-        var d = 0L; var t = 0L
-        rows.foreach(r => if (r.getBoolean(decoyIdx)) d += 1 else t += 1)
-        Iterator((pid, d, t))
-      }
-      .collect().sortBy(_._1)
-    val nParts = subtotals.length
-    val dOffsets = new Array[Long](nParts)
-    val tOffsets = new Array[Long](nParts)
-    var dAcc = 0L; var tAcc = 0L
-    subtotals.foreach { case (pid, d, t) =>
-      dOffsets(pid) = dAcc; tOffsets(pid) = tAcc; dAcc += d; tAcc += t
-    }
-
-    // pass B: per-row fdr + per-partition suffix-min inputs (min fdr)
-    val sc = df.sparkSession.sparkContext
-    val bD = sc.broadcast(dOffsets)
-    val bT = sc.broadcast(tOffsets)
-    val withFdrRdd = sorted.rdd.mapPartitionsWithIndex { (pid, rows) =>
-      var d = bD.value(pid); var t = bT.value(pid)
-      rows.map { r =>
-        if (r.getBoolean(decoyIdx)) d += 1 else t += 1
-        val fdr = d.toDouble / math.max(t, 1L)
-        Row.fromSeq(r.toSeq :+ d :+ t :+ fdr)
-      }
-    }
-    val fdrSchema = sorted.schema
-      .add("cum_decoys", LongType).add("cum_targets", LongType).add("fdr", DoubleType)
-    val withFdr = df.sparkSession.createDataFrame(withFdrRdd, fdrSchema)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val fdrIdx = fdrSchema.fieldIndex("fdr")
-    val partMins = withFdr.rdd
-      .mapPartitionsWithIndex { (pid, rows) =>
-        var m = Double.MaxValue
-        rows.foreach(r => m = math.min(m, r.getDouble(fdrIdx)))
-        Iterator((pid, m))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    // suffix min of LATER partitions for each pid
-    val laterMin = new Array[Double](nParts)
-    var acc = Double.MaxValue
-    for (p <- nParts - 1 to 0 by -1) { laterMin(p) = acc; acc = math.min(acc, partMins(p)) }
-    val bLater = sc.broadcast(laterMin)
-
-    // pass C: backwards in-partition suffix min, closed with later-partition min
-    val qRdd = withFdr.rdd.mapPartitionsWithIndex { (pid, rows) =>
-      val buf = rows.toArray
-      var m = bLater.value(pid)
-      var i = buf.length - 1
-      val out = new Array[Row](buf.length)
-      while (i >= 0) {
-        m = math.min(m, buf(i).getDouble(fdrIdx))
-        out(i) = Row.fromSeq(buf(i).toSeq :+ m)
-        i -= 1
-      }
-      out.iterator
-    }
-    val qSchema = fdrSchema.add("q_value", DoubleType)
-    // Materialize the result (localCheckpoint cuts the lineage) so both
-    // upstream caches can be released immediately — without this every
-    // call would leak a cached copy of the assay for the session lifetime.
-    val result = df.sparkSession.createDataFrame(qRdd, qSchema)
-      .drop("_td_decoy")
-      .localCheckpoint(true)
-    sorted.unpersist()
-    withFdr.unpersist()
-    result
-  }
-
   /** The PSM FDR of the index pipeline in ONE sorted sweep: adds `q` and
     * `fdrScore` to `df`, value-identical (bit for bit) to the composition
     * [[withQValues]] (no partitioning) -> `CombinedFdr.withFdrScoreFromCounts`
     * -> [[repairZeroQValuesAll]] over (`q_value` -> `q`, `fdr_score` ->
-    * `fdrScore`), which stays the parity oracle and the distributed form.
+    * `fdrScore`), which stays as the parity oracle.
     *
     * The narrow (key, score, isDecoy) projection is sorted once, best
     * first, into one partition — the same sort orders as the window form,
@@ -210,8 +83,10 @@ object TargetDecoy {
     * the same Column expression as [[repairZeroQValuesAll]] (Spark's
     * HALF_UP `round`), and (key, q, fdrScore) joins back to `df`.
     *
-    * For one assay of up to a few million PSMs (the pipeline's window
-    * path); larger assays take [[withQValuesGlobal]].
+    * Every assay takes this path, whatever its size. The corpus's largest
+    * assay has ~800k PSMs; at `local[4]` with a 6 GB driver the sweep
+    * completes 16M narrow rows (`tools/fdr_sweep_scale.scala`,
+    * `PERF_fdr_one_path.jsonl`).
     *
     * @param key unique, non-repeating row key — the tie-break of the sort
     *            and the join key back (null-safe, so one NULL key is kept)

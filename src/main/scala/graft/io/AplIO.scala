@@ -30,19 +30,16 @@ object AplIO {
 
     raw
       .withColumn("index", row_number().over(w).cast("long") - 1)
-      .select(
+      .select(Seq(
         col("fileName"),
         col("index"),
         col("index").cast("string").as("scanId"),
         coalesce(field("header"), lit("")).as("title"),
         lit(2).as("msLevel"),
-        field("mz").cast("double").as("precursorMz"),
-        coalesce(field("charge").cast("int"), lit(0)).as("precursorCharge"),
+        Numbers.double(field("mz")).as("precursorMz"),
+        // no charge line reads 0; a malformed one null
+        Numbers.int(coalesce(field("charge"), lit("0"))).as("precursorCharge"),
         lit(null).cast("double").as("retentionTime"),
-        transform(peakLines, l =>
-          element_at(split(trim(l), "[ \\t]+"), 1).cast("double")).as("masses"),
-        transform(peakLines, l =>
-          element_at(split(trim(l), "[ \\t]+"), 2).cast("double")).as("intensities"),
-      )
+      ) ++ Numbers.peaks(peakLines): _*)
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * becomes a `DataFrame` of spectra with an explicit 0-based per-file
   * `index` column, and the reference's point lookups become joins (J1).
   *
-  * Both readers cut a file into `END IONS`-delimited chunks and parse each
+  * The reader cuts a file into `END IONS`-delimited chunks and parses each
   * chunk with one native kernel, [[MgfBlockExpr]], in the scan stage. The
   * per-file index is a `row_number` over the parsed rows ordered by chunk
   * position, so the window's exchange carries parsed spectra and parses
@@ -29,30 +29,17 @@ object MgfIO {
   /** Splittable: `lineSep = "END IONS"` chunks the file at block
     * boundaries, so a 100 GB MGF parses across tasks. Chunk position is
     * `monotonically_increasing_id()`, which is monotone within a file
-    * because the text source enumerates file splits in offset order. */
+    * because the file scan keeps one file's splits in offset order: it
+    * sorts all splits by length, stably, and packs them into tasks in that
+    * order, and a file's splits all have the full split length except its
+    * last, shortest one. The per-file `index` is exact only under that
+    * assumption; IoSpec's "MGF per-file index is exact under forced tiny
+    * splits" pins it. */
   def readPaths(spark: SparkSession, paths: Seq[String]): DataFrame =
     spectra(spark.read.option("lineSep", "END IONS").text(paths: _*).select(
       regexp_replace(input_file_name(), ".*/", "").as("fileName"),
       monotonically_increasing_id().as("_chunk"),
       col("value")))
-
-  /** Exact-index variant: reads each file WHOLE in one task
-    * (`wholeTextFiles`), so chunk positions, and with them the 0-based
-    * per-file index, are exact by construction rather than by split
-    * ordering. Use for the positional cluster contract (J4) and
-    * small-to-medium files; [[read]] is the path for huge single files.
-    * Rows equal [[readPaths]]'s: the same chunks, the same kernel. */
-  def readExact(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spectra(spark.sparkContext
-      .wholeTextFiles(path)
-      .flatMap { case (file, content) =>
-        val name = file.replaceAll(".*/", "")
-        content.split("END IONS", -1).iterator.zipWithIndex
-          .map { case (chunk, i) => (name, i.toLong, chunk) }
-      }
-      .toDF("fileName", "_chunk", "value"))
-  }
 
   /** (fileName, _chunk, value) chunks -> spectra rows, numbered per file
     * in `_chunk` order. `explode` evaluates the kernel once per chunk and

@@ -44,23 +44,19 @@ object Ms2DtaIO {
 
     raw
       .withColumn("index", row_number().over(w).cast("long") - 1)
-      .select(
+      .select(Seq(
         col("fileName"),
         col("index"),
         element_at(sLine, 1).cast("long").cast("string").as("scanId"),
         lit("").as("title"),
         lit(2).as("msLevel"),
-        element_at(sLine, 3).cast("double").as("precursorMz"),
-        coalesce(
-          when(size(zLines) > 0,
-            element_at(split(trim(element_at(zLines, 1)), "[ \\t]+"), 2).cast("int")),
-          lit(0)).as("precursorCharge"),
+        Numbers.doubleAt(sLine, 3).as("precursorMz"),
+        // no Z line (or no charge on it) reads 0; a malformed charge null
+        Numbers.int(coalesce(
+          try_element_at(split(trim(try_element_at(zLines, lit(1))), "[ \\t]+"), lit(2)),
+          lit("0"))).as("precursorCharge"),
         lit(null).cast("double").as("retentionTime"),
-        transform(peakLines, l =>
-          element_at(split(trim(l), "[ \\t]+"), 1).cast("double")).as("masses"),
-        transform(peakLines, l =>
-          element_at(split(trim(l), "[ \\t]+"), 2).cast("double")).as("intensities"),
-      )
+      ) ++ Numbers.peaks(peakLines): _*)
   }
 
   /** DTA scan: one spectrum per file (wholeTextFiles, one task each). */

@@ -47,32 +47,19 @@ object PklIO {
     val peakLines = slice(lines, lit(2), size(lines))
     val w = Window.partitionBy(col("fileName")).orderBy(col("_mid"), col("_pos"))
 
-    // ANSI-safe numeric parse: rlike-guarded cast (the engine's pattern
-    // for untrusted strings) — a malformed token becomes null, never an
-    // ANSI cast crash that would kill the whole scan.
-    val numRe = "^[+-]?([0-9]+\\.?[0-9]*|\\.[0-9]+)([eE][+-]?[0-9]+)?$"
-    def numAt(arr: org.apache.spark.sql.Column, i: Int) = {
-      val tok = try_element_at(arr, lit(i))
-      when(tok.rlike(numRe), tok.cast("double"))
-    }
-
     raw
       .withColumn("index", row_number().over(w).cast("long") - 1)
-      .select(
+      .select(Seq(
         col("fileName"),
         col("index"),
         col("index").cast("string").as("scanId"),
         lit("").as("title"),
         lit(2).as("msLevel"),
-        numAt(header, 1).as("precursorMz"),
+        Numbers.doubleAt(header, 1).as("precursorMz"),
         // a malformed 2-field header yields a null charge (caught by the
         // F12 validity gate) instead of an ANSI INVALID_ARRAY_INDEX crash
-        numAt(header, 3).cast("int").as("precursorCharge"),
+        Numbers.int(try_element_at(header, lit(3))).as("precursorCharge"),
         lit(null).cast("double").as("retentionTime"),
-        transform(peakLines, l =>
-          numAt(split(trim(l), "[ \\t]+"), 1)).as("masses"),
-        transform(peakLines, l =>
-          numAt(split(trim(l), "[ \\t]+"), 2)).as("intensities"),
-      )
+      ) ++ Numbers.peaks(peakLines): _*)
   }
 }

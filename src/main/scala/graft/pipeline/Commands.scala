@@ -58,25 +58,18 @@ object Commands {
         UsiFunctions.IdFormat.MultiPeakListNativeId)
       .otherwise(UsiFunctions.IdFormat.None)
 
-  /** generate-index-files (mzTab + MGF slice): parse, join run metadata,
-    * run the index DAG, write the three JSON-lines tables (K1) plus the
-    * per-source-file partitioned spectra (K2).
-    * Reference: PrideAnalysisAssayService.writeAnalysisOutputFromResultFiles:242-304. */
   /** Union all spectra files under a directory: MGF and PKL via splittable
     * text block scans, mzML via the StAX task-per-file parser. Each source
     * carries its `fileType` for J1 key derivation. */
-  def readSpectraDir(spark: SparkSession, dir: String, exactMgf: Boolean = false): DataFrame = {
+  def readSpectraDir(spark: SparkSession, dir: String): DataFrame = {
     val all = {
       val d = new java.io.File(dir)
       if (d.isDirectory) d.listFiles().toSeq.map(_.getPath) else Seq(dir)
     }
     def named(suffix: String) = all.filter(_.toLowerCase.endsWith(suffix))
     val parts = Seq(
-      Option(named(".mgf")).filter(_.nonEmpty).map { f =>
-        val mgf = if (exactMgf) MgfIO.readExact(spark, f.mkString(","))
-          else MgfIO.readPaths(spark, f)
-        mgf.withColumn("fileType", lit("MGF"))
-      },
+      Option(named(".mgf")).filter(_.nonEmpty).map(f =>
+        MgfIO.readPaths(spark, f).withColumn("fileType", lit("MGF"))),
       Option(named(".pkl")).filter(_.nonEmpty).map(f =>
         PklIO.readPaths(spark, f).withColumn("fileType", lit("PKL"))),
       Option(named(".mzml")).filter(_.nonEmpty).map(f =>
@@ -99,6 +92,25 @@ object Commands {
     parts.reduce(_ unionByName _)
   }
 
+  /** Runs the index DAG and writes its three JSON-lines tables (K1), the
+    * spectra partitioned per source file (K2). */
+  private def writeIndex(
+      psms: DataFrame,
+      spectra: DataFrame,
+      sdrf: Option[DataFrame],
+      cfg: IndexPipeline.IndexConfig,
+      outDir: String,
+  ): IndexPipeline.IndexOutputs = {
+    val out = IndexPipeline.run(psms, spectra, sdrf, cfg)
+    ArchiveJson.writePartitioned(out.archiveSpectra, s"$outDir/archive_spectra")
+    ArchiveJson.write(out.psmSummaries, s"$outDir/psm_summaries")
+    ArchiveJson.write(out.proteinEvidence, s"$outDir/protein_evidence")
+    out
+  }
+
+  /** generate-index-files (mzTab + MGF slice): parse, join run metadata,
+    * run the index DAG and write its tables.
+    * Reference: PrideAnalysisAssayService.writeAnalysisOutputFromResultFiles:242-304. */
   def generateIndexFiles(
       spark: SparkSession,
       mzTabPath: String,
@@ -106,20 +118,14 @@ object Commands {
       outDir: String,
       cfg: IndexPipeline.IndexConfig,
       sdrfPath: Option[String] = None,
-      exactMgf: Boolean = false,
   ): IndexPipeline.IndexOutputs = {
     val psmsRaw = MzTabIO.standardPsms(
       MzTabIO.readPsmSection(spark, mzTabPath), cfg.decoyPrefix)
     val runInfo = broadcast(msRunFileInfo(MzTabIO.readMsRuns(spark, mzTabPath)))
     val psms = psmsRaw.join(runInfo, Seq("msRun"), "left")
-    val spectra = readSpectraDir(spark, mgfDir, exactMgf)
+    val spectra = readSpectraDir(spark, mgfDir)
     val sdrf = sdrfPath.map(SideInputs.readSdrf(spark, _))
-
-    val out = IndexPipeline.run(psms, spectra, sdrf, cfg)
-    ArchiveJson.writePartitioned(out.archiveSpectra, s"$outDir/archive_spectra")
-    ArchiveJson.write(out.psmSummaries, s"$outDir/psm_summaries")
-    ArchiveJson.write(out.proteinEvidence, s"$outDir/protein_evidence")
-    out
+    writeIndex(psms, spectra, sdrf, cfg, outDir)
   }
 
   /** generate-index-files from mzIdentML (the reference's primary input,
@@ -133,7 +139,6 @@ object Commands {
       outDir: String,
       cfg: IndexPipeline.IndexConfig,
       sdrfPath: Option[String] = None,
-      exactMgf: Boolean = false,
   ): IndexPipeline.IndexOutputs = {
     // one StAX pass per file serves both frames (psms + SpectraData)
     val (psmsRaw, sdRaw, releaseParsed) = MzIdentMlIO.readParsed(spark, mzidPaths)
@@ -237,14 +242,9 @@ object Commands {
     // and pin the full parsed-XML RDD in MEMORY_AND_DISK until session
     // end. On success the outputs above have materialized the pipeline
     // caches, so the raw parse RDD has no remaining readers either way.
-    try {
-      val out = IndexPipeline.run(psms, readSpectraDir(spark, spectraDir, exactMgf),
-        sdrfPath.map(SideInputs.readSdrf(spark, _)), cfg)
-      ArchiveJson.writePartitioned(out.archiveSpectra, s"$outDir/archive_spectra")
-      ArchiveJson.write(out.psmSummaries, s"$outDir/psm_summaries")
-      ArchiveJson.write(out.proteinEvidence, s"$outDir/protein_evidence")
-      out
-    } finally releaseParsed()
+    try writeIndex(psms, readSpectraDir(spark, spectraDir),
+      sdrfPath.map(SideInputs.readSdrf(spark, _)), cfg, outDir)
+    finally releaseParsed()
   }
 
   /** generate-index-files from legacy PRIDE XML result files — the last
@@ -287,12 +287,7 @@ object Commands {
         "charge", "expMassToCharge", "calcMassToCharge", "modifications",
         "sourceId", "fileName", "idFormat", "fileType", "retentionTime")
 
-    val out = IndexPipeline.run(psms, spectra,
-      sdrfPath.map(SideInputs.readSdrf(spark, _)), cfg)
-    ArchiveJson.writePartitioned(out.archiveSpectra, s"$outDir/archive_spectra")
-    ArchiveJson.write(out.psmSummaries, s"$outDir/psm_summaries")
-    ArchiveJson.write(out.proteinEvidence, s"$outDir/protein_evidence")
-    out
+    writeIndex(psms, spectra, sdrfPath.map(SideInputs.readSdrf(spark, _)), cfg, outDir)
   }
 
   /** Index sidecar location for an MGF output dir: the (usi, index)

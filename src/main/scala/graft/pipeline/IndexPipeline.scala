@@ -33,21 +33,6 @@ object IndexPipeline {
       uniquePeptides: Int = 0,
       /** true when smaller PSM scores are better (e-values / PEP). */
       scoreLowerIsBetter: Boolean = false,
-      /** Force the range-partitioned distributed FDR
-        * (TargetDecoy.withQValuesGlobal) instead of the single-task sorted
-        * sweep (TargetDecoy.withSweptQAndFdrScore). The sweep is faster up
-        * to several million PSMs: it sorts only the narrow (psmId, score,
-        * isDecoy) rows and joins two values back, while the distributed
-        * path range-sorts and re-materializes the full PSM rows. Normally
-        * leave this false — the pipeline auto-switches to the distributed
-        * path when the deduped PSM count exceeds [[fdrWindowMaxRows]]. */
-      distributedFdr: Boolean = false,
-      /** Auto-switch threshold: above this many deduped PSMs the FDR takes
-        * the distributed range-sort path rather than one sweep task.
-        * 4M narrow rows sort comfortably in one task (reference assays cap
-        * at ~800k, conf/base.config:53-57); beyond that the single sorted
-        * partition becomes the straggler. */
-      fdrWindowMaxRows: Long = 4000000,
       /** Picked protein FDR (published competition method): each
         * target/decoy protein pair (accession vs decoyPrefix+accession)
         * keeps only its better-scoring member before the protein-level
@@ -102,11 +87,6 @@ object IndexPipeline {
     /** Release the shared cached intermediates once outputs are written. */
     def unpersist(): Unit = cached.foreach(_.unpersist())
   }
-
-  /** The A14 path decision, exposed for tests: distributed when forced or
-    * when the deduped PSM count exceeds the one-task window budget. */
-  def useDistributedFdr(cfg: IndexConfig, psmCount: Long): Boolean =
-    cfg.distributedFdr || psmCount > cfg.fdrWindowMaxRows
 
   private def param(accession: String, name: String, value: Column): Column =
     struct(lit(accession).as("accession"), lit(name).as("name"),
@@ -202,7 +182,7 @@ object IndexPipeline {
 
     // A live rescue subtree reads psmKeyed three times (exact side, probe
     // collect, rescued side) — pin it so the upstream DAG (in the pipeline:
-    // the distributed FDR sort) runs once. Lazy persist: the probe collect
+    // the FDR sweep) runs once. Lazy persist: the probe collect
     // below fills it. run() releases it via IndexOutputs.unpersist();
     // standalone callers hold only their small keyed frames.
     psmKeyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -306,14 +286,13 @@ object IndexPipeline {
             coalesce(col("proteinAccession"), lit("")))).as("_row"))
       .select(Seq(col("psmId"), col("proteinAccessions"), col("isDecoy")) ++
         payloadCols.map(c => col(s"_row.`$c`").as(c)): _*)
-      // Shared by the FDR path, the F9 counters, and the assay-validity
-      // flag; the eager count below both materializes the cache and
-      // decides the FDR path.
+      // Shared by the FDR sweep, the F9 counters, and the assay-validity
+      // flag; the eager count below materializes the cache.
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // ---- A14 FDR + FDRScore + P9 repair --------------------------------
-    // ONE eager aggregate materializes the cache and yields both the F9
-    // counters and the FDR path decision; assay validity then enters the
+    // ONE eager aggregate materializes the cache and yields the F9
+    // counters; assay validity then enters the
     // plan as a literal (no broadcast-subquery crossJoin per output).
     // Counts come from the UNFILTERED PSM set (decoys counted before any
     // q-value filter, PrideAnalysisAssayService.java:440-447).
@@ -327,24 +306,10 @@ object IndexPipeline {
     // Rank-interpolated FDR score (the value the reference writes under
     // MS:1002354, PrideAnalysisAssayService.java:627-628), computed from
     // the raw q-value steps; both it and the q-value then get the
-    // getQValueLower-style zero repair (P9). Up to fdrWindowMaxRows all of
-    // it is ONE sorted sweep over the narrow (psmId, score, isDecoy) rows,
-    // joined back; above it, the same values come from the range-sorted
-    // composition.
-    val repaired =
-      if (useDistributedFdr(cfg, psmCount)) {
-        val scored = TargetDecoy.withQValuesGlobal(
-          psmsU, col("score"), col("isDecoy"), col("psmId"),
-          lowerIsBetter = cfg.scoreLowerIsBetter)
-        val withFdrScore = graft.fdr.CombinedFdr.withFdrScoreFromCounts(scored, col("isDecoy"))
-        // both zero-repairs from ONE aggregation pass — the nested
-        // single-column form re-embedded the FDR subtree once per column
-        TargetDecoy.repairZeroQValuesAll(withFdrScore,
-          Seq(col("q_value") -> "q", col("fdr_score") -> "fdrScore"))
-          .drop("cum_decoys", "cum_targets", "fdr", "q_value", "fdr_score")
-      } else
-        TargetDecoy.withSweptQAndFdrScore(psmsU, "psmId", col("score"), col("isDecoy"),
-          lowerIsBetter = cfg.scoreLowerIsBetter)
+    // getQValueLower-style zero repair (P9). All of it is ONE sorted sweep
+    // over the narrow (psmId, score, isDecoy) rows, joined back.
+    val repaired = TargetDecoy.withSweptQAndFdrScore(psmsU, "psmId", col("score"),
+      col("isDecoy"), lowerIsBetter = cfg.scoreLowerIsBetter)
 
     // ---- F3/F4/F6/F7 PSM filters ---------------------------------------
     val filtered = repaired

@@ -459,18 +459,34 @@ class CommandsSpec extends AnyFunSuite {
     assert(graft.Cli.parseArgs(Array("cmd", "--out", "O", "--picked-protein-fdr")) ==
       Map("out" -> "O", "picked-protein-fdr" -> "true"))
     // a bare flag mid-line must not swallow the next option as its value
-    assert(graft.Cli.parseArgs(Array("cmd", "--exact-mgf", "--out", "O")) ==
-      Map("exact-mgf" -> "true", "out" -> "O"))
+    assert(graft.Cli.parseArgs(Array("cmd", "--picked-protein-fdr", "--out", "O")) ==
+      Map("picked-protein-fdr" -> "true", "out" -> "O"))
     // explicit values still work
-    assert(graft.Cli.parseArgs(Array("cmd", "--exact-mgf", "false")) ==
-      Map("exact-mgf" -> "false"))
+    assert(graft.Cli.parseArgs(Array("cmd", "--picked-protein-fdr", "false")) ==
+      Map("picked-protein-fdr" -> "false"))
     // stray non-option tokens are an error, not a silent drop
     intercept[IllegalArgumentException](graft.Cli.parseArgs(Array("cmd", "stray")))
     // a value-typed option with a forgotten value is an ERROR — a trailing
     // '--out' must not silently write the index to a dir named 'true'
     intercept[IllegalArgumentException](graft.Cli.parseArgs(Array("cmd", "--out")))
     intercept[IllegalArgumentException](
-      graft.Cli.parseArgs(Array("cmd", "--out", "--exact-mgf")))
+      graft.Cli.parseArgs(Array("cmd", "--out", "--picked-protein-fdr")))
+  }
+
+  test("CLI rejects an option its command does not read: typos and removed flags") {
+    val index = Array("generate-index-files", "--mzid", "a.mzid", "--spectra", "s",
+      "--project-accession", "PXD", "--out", "o")
+    for (extra <- Seq(Seq("--qvalue-treshold", "0.05"), Seq("--exact-mgf", "true"),
+        Seq("--distributed-fdr"), Seq("--native-cluster"))) {
+      val e = intercept[IllegalArgumentException](Cli.run(spark, index ++ extra))
+      assert(e.getMessage.contains(s"unknown option ${extra.head} for generate-index-files\n"),
+        e.getMessage)
+      assert(e.getMessage.contains(Cli.usage))
+    }
+    // an option of another command is unknown too
+    val e = intercept[IllegalArgumentException](Cli.run(spark,
+      Array("generate-mgf-files", "--spectra-json", "j", "--out", "o", "--mzid", "a.mzid")))
+    assert(e.getMessage.contains("unknown option --mzid for generate-mgf-files\n"), e.getMessage)
   }
 
   test("perform-inference --native-cluster: standalone path, no MaraCluster TSV") {

@@ -55,24 +55,6 @@ class FdrSpec extends AnyFunSuite {
     assert(got == Seq(0.0, 1.0, 1.0, 1.0))
   }
 
-  test("distributed global q-values equal the window implementation") {
-    val rnd = new scala.util.Random(11)
-    // include score ties to exercise cross-partition tie ordering
-    val rows = (1 to 2000).map(i =>
-      (i.toLong, math.floor(rnd.nextDouble() * 50), rnd.nextInt(4) == 0))
-    val df = rows.toDF("id", "score", "decoy").repartition(7)
-
-    val windowed = TargetDecoy
-      .withQValues(df, Seq.empty, col("score"), col("decoy"), col("id"))
-      .select(col("id"), col("cum_decoys"), col("cum_targets"), col("fdr"), col("q_value"))
-      .orderBy(col("id")).collect().map(_.toSeq)
-    val global = TargetDecoy
-      .withQValuesGlobal(df, col("score"), col("decoy"), col("id"), numPartitions = 5)
-      .select(col("id"), col("cum_decoys"), col("cum_targets"), col("fdr"), col("q_value"))
-      .orderBy(col("id")).collect().map(_.toSeq)
-    assert(windowed.toSeq == global.toSeq)
-  }
-
   // ---- P9 q-value repair ----
 
   test("repairZeroQValues: zero becomes min-positive/10 rounded to 6dp") {
@@ -169,27 +151,15 @@ class FdrSpec extends AnyFunSuite {
         .select(col("id")).collect().head.getLong(0)
     val win = TargetDecoy.withQValues(df, Seq.empty, col("score"), col("decoy"),
       col("id"), lowerIsBetter = true)
-    val glob = TargetDecoy.withQValuesGlobal(df, col("score"), col("decoy"),
-      col("id"), lowerIsBetter = true, numPartitions = 3)
     assert(firstRanked(win) == 1L) // best real score, not a null row
-    assert(firstRanked(glob) == 1L)
-    // both forms fully agree, nulls included
-    val a = win.orderBy(col("id")).select(col("id"), col("fdr"), col("q_value"))
-      .collect().map(_.toSeq).toSeq
-    val b = glob.orderBy(col("id")).select(col("id"), col("fdr"), col("q_value"))
-      .collect().map(_.toSeq).toSeq
+    // the pipeline's sweep ranks the same way: its q is the window's,
+    // zero-repaired, nulls included
+    val a = TargetDecoy.repairZeroQValues(win, col("q_value"), Seq.empty, "q")
+      .orderBy(col("id")).select(col("id"), col("q")).collect().map(_.toSeq).toSeq
+    val b = TargetDecoy.withSweptQAndFdrScore(df, "id", col("score"), col("decoy"),
+      lowerIsBetter = true)
+      .orderBy(col("id")).select(col("id"), col("q")).collect().map(_.toSeq).toSeq
     assert(a == b)
-  }
-
-  test("withQValuesGlobal re-run on its own output replaces columns, never duplicates") {
-    val df = Seq((1L, 10.0, false), (2L, 8.0, true), (3L, 6.0, false))
-      .toDF("id", "score", "decoy")
-    val once = TargetDecoy.withQValuesGlobal(df, col("score"), col("decoy"), col("id"))
-    val twice = TargetDecoy.withQValuesGlobal(once, col("score"), col("decoy"), col("id"))
-    assert(twice.columns.count(_ == "fdr") == 1)
-    assert(twice.columns.count(_ == "q_value") == 1)
-    // selecting the recomputed column must not be ambiguous
-    assert(twice.select(col("q_value")).count() == 3)
   }
 
   test("repairZeroQValuesAll matches nested single-column repairs") {

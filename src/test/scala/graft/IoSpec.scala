@@ -64,9 +64,6 @@ class IoSpec extends AnyFunSuite {
     val path = tmpFile("run3.mgf", threeCol)
     val a = MgfIO.read(spark, path).head()
     assert(a.getAs[scala.collection.Seq[Double]]("intensities").toSeq == Seq(200.0, 30.0))
-    // parity with the whole-file parser on the same input
-    val b = MgfIO.readExact(spark, path).head()
-    assert(b.getAs[scala.collection.Seq[Double]]("intensities").toSeq == Seq(200.0, 30.0))
   }
 
   test("MGF writer fails loudly on a null precursor field (positional contract)") {
@@ -80,11 +77,34 @@ class IoSpec extends AnyFunSuite {
     assert(e.getMessage.contains("precursorCharge"), e.getMessage)
   }
 
-  test("MGF exact reader equals the splittable reader") {
-    val path = tmpFile("run1.mgf", mgf)
-    val a = MgfIO.read(spark, path).orderBy(col("index")).collect().map(_.toSeq)
-    val b = MgfIO.readExact(spark, path).orderBy(col("index")).collect().map(_.toSeq)
-    assert(a.toSeq == b.toSeq)
+  test("MGF per-file index is exact under forced tiny splits") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val dir = Files.createTempDirectory("graft-mgf-splits")
+    val rnd = new scala.util.Random(20261020)
+    // five files of unequal size; each TITLE carries its block's position
+    Seq(50, 200, 120, 75, 160).zipWithIndex.foreach { case (blocks, f) =>
+      val text = (0 until blocks).map { b =>
+        val peaks = Seq.fill(rnd.nextInt(6))(f"${rnd.nextDouble() * 2000}%.4f\t${rnd.nextInt(9999)}")
+        ("BEGIN IONS" +: s"TITLE=$b" +: "PEPMASS=445.12" +: peaks :+ "END IONS").mkString("\n")
+      }.mkString("", "\n", "\n")
+      Files.writeString(dir.resolve(s"run$f.mgf"), text)
+    }
+    val confs = Seq("spark.sql.files.maxPartitionBytes" -> "2048",
+      "spark.sql.files.openCostInBytes" -> "0")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val df = MgfIO.read(spark, dir.toString)
+      val rows = df.select(col("fileName"), col("index"), col("title")).collect()
+      assert(rows.length == 605)
+      val misplaced = rows.filter(r => r.getLong(1) != r.getString(2).toLong)
+      assert(misplaced.isEmpty, misplaced.take(5).mkString(", "))
+      object Aqe extends AdaptiveSparkPlanHelper
+      val scanTasks = Aqe.collect(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+      }
+      assert(scanTasks.sum > 5, scanTasks)
+    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
   /** `body` with the two codegen confs set, then unset. */
@@ -182,13 +202,14 @@ class IoSpec extends AnyFunSuite {
   }
 
   test("MGF malformed numbers become nulls on both readers; tab-indented peaks parse") {
+    // the readers: the library's, and the pipeline's spectra-directory one
     val hostile = Seq(
       "BEGIN IONS", "TITLE=hostile", "PEPMASS=abc", "CHARGE=x+", "RTINSECONDS=n/a",
       "\t100.5 200.25", "101.5 2x0", "1.2.3\t7.0", "END IONS",
       "BEGIN IONS", "PEPMASS=", "CHARGE=99999999999+", "RTINSECONDS=12.5", "END IONS", "",
     ).mkString("\n")
     val path = tmpFile("hostile.mgf", hostile)
-    for (df <- Seq(MgfIO.read(spark, path), MgfIO.readExact(spark, path))) {
+    for (df <- Seq(MgfIO.read(spark, path), graft.pipeline.Commands.readSpectraDir(spark, path))) {
       val rows = df.orderBy("index").collect()
       assert(rows.length == 2)
       val r0 = rows(0)

@@ -10,10 +10,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-2 behaviors: counts-based FDR score, FDR auto-switch, global
-  * repair without a window, distributed global index, deterministic IVF
-  * training, multi-evidence mzid rows, file-scoped psmId uniqueness,
-  * peak-list fileType routing, DecimalFormat parity. */
+/** Round-2 behaviors: counts-based FDR score, an RDD-free index plan,
+  * global repair without a window, distributed global index,
+  * deterministic IVF training, multi-evidence mzid rows, file-scoped psmId
+  * uniqueness, peak-list fileType routing, DecimalFormat parity. */
 class Round2Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -42,53 +42,13 @@ class Round2Spec extends AnyFunSuite {
     }
   }
 
-  test("counts-based FDR score works on the distributed global q-value output") {
-    val df = randomPsms(1000, 29)
-    val windowed = CombinedFdr
-      .withFdrScore(df, Seq.empty, col("score"), col("decoy"), col("id"))
-      .select(col("id"), col("fdr_score"))
-    val global = CombinedFdr.withFdrScoreFromCounts(
-      TargetDecoy.withQValuesGlobal(df, col("score"), col("decoy"), col("id"), numPartitions = 7),
-      col("decoy"))
-      .select(col("id"), col("fdr_score").as("fdr_score_g"))
-    val joined = windowed.join(global, "id").collect()
-    assert(joined.length == 1000)
-    joined.foreach(r => assert(r.getDouble(1) == r.getDouble(2)))
-  }
-
-  test("FDR auto-switch: threshold decides the path, manual flag forces it") {
-    val cfg = IndexPipeline.IndexConfig("PX", "a1", fdrWindowMaxRows = 1000)
-    assert(!IndexPipeline.useDistributedFdr(cfg, 1000))
-    assert(IndexPipeline.useDistributedFdr(cfg, 1001))
-    assert(IndexPipeline.useDistributedFdr(cfg.copy(distributedFdr = true), 1))
-  }
-
-  test("index outputs identical when the auto-switch takes the distributed path") {
-    val base = graft.pipeline.DemoAssay.config
-    val windowOut = IndexPipeline
-      .run(graft.pipeline.DemoAssay.psms(spark), graft.pipeline.DemoAssay.spectra(spark),
-        None, base)
-      .archiveSpectra.orderBy(col("usi")).collect()
-    // fdrWindowMaxRows = 1 forces every assay over the threshold
-    val distOut = IndexPipeline
-      .run(graft.pipeline.DemoAssay.psms(spark), graft.pipeline.DemoAssay.spectra(spark),
-        None, base.copy(fdrWindowMaxRows = 1))
-      .archiveSpectra.orderBy(col("usi")).collect()
-    assert(windowOut.length == distOut.length && windowOut.nonEmpty)
-    windowOut.zip(distOut).foreach { case (a, b) => assert(a == b) }
-    // and the over-threshold run really took the distributed path: the
-    // range-sort q-value frames enter the plan as RDD scans, which never
-    // appear on the window path
-    val distPlan = IndexPipeline
-      .run(graft.pipeline.DemoAssay.psms(spark), graft.pipeline.DemoAssay.spectra(spark),
-        None, base.copy(fdrWindowMaxRows = 1))
-      .archiveSpectra.queryExecution.optimizedPlan.toString
-    assert(distPlan.contains("ExistingRDD") || distPlan.contains("LogicalRDD"))
-    val windowPlan = IndexPipeline
-      .run(graft.pipeline.DemoAssay.psms(spark), graft.pipeline.DemoAssay.spectra(spark),
-        None, base)
-      .archiveSpectra.queryExecution.optimizedPlan.toString
-    assert(!windowPlan.contains("ExistingRDD") && !windowPlan.contains("LogicalRDD"))
+  test("the index plan scans no RDD: the FDR sweep stays in the DataFrame plan") {
+    val out = IndexPipeline.run(graft.pipeline.DemoAssay.psms(spark),
+      graft.pipeline.DemoAssay.spectra(spark), None, graft.pipeline.DemoAssay.config)
+    try {
+      val plan = out.archiveSpectra.queryExecution.optimizedPlan.toString
+      assert(!plan.contains("ExistingRDD") && !plan.contains("LogicalRDD"), plan)
+    } finally out.unpersist()
   }
 
   test("global zero-q repair (broadcast aggregate) matches the grouped window form") {

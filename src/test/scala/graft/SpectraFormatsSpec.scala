@@ -259,6 +259,44 @@ class SpectraFormatsSpec extends AnyFunSuite {
     assert(rows(1).getAs[Int]("precursorCharge") == 3)
   }
 
+  test("MS2 and APL malformed numbers become nulls, not ANSI cast errors") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    def seqAt(r: org.apache.spark.sql.Row, c: String) = r.getSeq[Any](r.fieldIndex(c))
+    val dir = Files.createTempDirectory("graft-hostile-ms2-apl")
+    Files.writeString(dir.resolve("run.ms2"), Seq(
+      "H\tExtractor\ttest",
+      "S\t1\t1\t4.4.5", "Z\tx\t890.9", "1.2.3\t7.0", "100.0\t2e",
+      "S\t2\t2\t500.5", "Z\t99999999999\t1", "200.0 20.0",
+      "S\t3\t3\t600.25", "300.0 30.0", "").mkString("\n"))
+    val ms2 = graft.io.Ms2DtaIO.readMs2(spark, dir.resolve("run.ms2").toString)
+      .orderBy(col("index")).collect()
+    assert(ms2.length == 3)
+    assert(ms2(0).isNullAt(ms2(0).fieldIndex("precursorMz")))
+    assert(ms2(0).isNullAt(ms2(0).fieldIndex("precursorCharge")))
+    assert(seqAt(ms2(0), "masses") == Seq(null, 100.0))
+    assert(seqAt(ms2(0), "intensities") == Seq(7.0, null))
+    assert(ms2(1).getAs[Double]("precursorMz") == 500.5)
+    assert(ms2(1).isNullAt(ms2(1).fieldIndex("precursorCharge")))
+    assert(ms2(2).getAs[Int]("precursorCharge") == 0) // no Z line
+    assert(seqAt(ms2(2), "masses") == Seq(300.0))
+
+    Files.writeString(dir.resolve("run.apl"), Seq(
+      "peaklist start", "mz=abc", "charge=x", "header=bad", "1.2.3\t7.0", "100.0\t2e",
+      "peaklist end",
+      "peaklist start", "mz=600.25", "charge=99999999999", "300.0\t30.0", "peaklist end",
+      "peaklist start", "mz=700.5", "400.0\t40.0", "peaklist end", "").mkString("\n"))
+    val apl = graft.io.AplIO.read(spark, dir.resolve("run.apl").toString)
+      .orderBy(col("index")).collect()
+    assert(apl.length == 3)
+    assert(apl(0).isNullAt(apl(0).fieldIndex("precursorMz")))
+    assert(apl(0).isNullAt(apl(0).fieldIndex("precursorCharge")))
+    assert(seqAt(apl(0), "masses") == Seq(null, 100.0))
+    assert(seqAt(apl(0), "intensities") == Seq(7.0, null))
+    assert(apl(1).getAs[Double]("precursorMz") == 600.25)
+    assert(apl(1).isNullAt(apl(1).fieldIndex("precursorCharge")))
+    assert(apl(2).getAs[Int]("precursorCharge") == 0) // no charge line
+  }
+
   test("PRIDE XML identification parser: sections, scores, decoys, mods") {
     val path = graft.pipeline.DemoFixtures.prideXmlIdentFile()
     val psms = graft.io.PrideXmlIO.parseIdentFile(path).sortBy(p => (p.psmId, p.proteinAccession))
